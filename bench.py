@@ -328,7 +328,10 @@ def chunk_queries(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (what `nproc` prints)
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     # test rig: throwaway catalog tables go to tmpfs scratch (opt-in
     # gate in session.get_spark — ADVICE r15)
     os.environ.setdefault("FIREWORKS_SCRATCH_WAREHOUSE", "1")

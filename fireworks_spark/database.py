@@ -21,10 +21,6 @@ large ones shuffle on the key like any join. No collect, no driver loops.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -159,16 +155,12 @@ class Table:
         return Transaction(self)
 
     def _swap(self, new_df: DataFrame) -> None:
-        tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        new_df.write.format(self.fmt).mode("overwrite").save(tmp)
-        os.rename(self.path, old)
-        try:
-            os.rename(tmp, self.path)
-        except OSError:
-            os.rename(old, self.path)  # rollback
-            raise
-        shutil.rmtree(old)
+        from fireworks_spark.publish import swap_dir
+
+        def stage(tmp):
+            new_df.write.format(self.fmt).mode("overwrite").save(tmp)
+
+        swap_dir(self.path, stage)
 
 
 class Transaction:

@@ -12,9 +12,16 @@ Three tiers, chosen per format by what scales:
    read — no openpyxl), msgpack (the codec implemented from the public
    spec — pandas dropped its own), pandas pickle parts, and well-formed
    HTML tables.
-   Same layout as the feather connector (io_formats.py): one file per task
-   on read, one file per partition on write, the driver touches only a
-   schema probe.
+   Every one, like the feather connector (io_formats.py) and the
+   sequence formats (sources.py), is built on the shared skeleton in
+   connector.py: one task per file on read (``read_files``); on write,
+   one file per partition (pickle: per Arrow batch) rendered under a
+   dot-prefixed scratch name and renamed into a staging directory
+   (``write_parts``), which ``publish.swap_dir`` swaps into place after
+   checking every reported file landed. Writing to an existing path
+   REPLACES its contents, as pandas' ``to_*`` do, and a write that
+   fails leaves the previous output readable. The driver touches only
+   a schema probe.
 3. **Driver-edge renders** (dict/records/string/latex): human-facing,
    inherently small outputs — explicit row-capped collects that refuse to
    silently truncate.
@@ -30,12 +37,14 @@ name the reference accepts.
 
 from __future__ import annotations
 
-import glob
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fireworks_spark.connector import read_files, source_files, write_parts
 
 # --------------------------------------------------------------------------
 # Stata .dta — file-parallel connector (pandas codec, no external deps)
@@ -51,29 +60,16 @@ def write_stata(df: DataFrame, path: str, version: int = 118) -> None:
     partition size accordingly); across partitions the write is fully
     parallel. Stata has no 64-bit integer: values beyond int32 raise in
     the codec rather than corrupt silently."""
-    os.makedirs(path, exist_ok=True)
 
-    def _write(batches):
+    def render(batches, part):
         import pandas as pd
-        from pyspark import TaskContext
 
-        parts = [b for b in batches if len(b)]
-        rows = 0
-        if parts:
-            import uuid
-
-            pdf = pd.concat(parts, ignore_index=True)
-            pid = TaskContext.get().partitionId()
-            fname = os.path.join(
-                path, f"part-{pid:05d}-{uuid.uuid4().hex}.dta"
+        with part.open() as fh:
+            pd.concat(list(batches), ignore_index=True).to_stata(
+                fh, write_index=False, version=version
             )
-            pdf.to_stata(fname, write_index=False, version=version)
-            rows = len(pdf)
-        yield pd.DataFrame({"rows": [rows]})
 
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "dta", render)
 
 
 def read_stata(spark: SparkSession, path: str) -> DataFrame:
@@ -83,27 +79,18 @@ def read_stata(spark: SparkSession, path: str) -> DataFrame:
     the first file for the schema; files must share one schema."""
     import pandas as pd
 
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.dta")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no .dta files under {path}")
+    files = source_files(path, ".dta", (".dta",))
     with pd.read_stata(files[0], chunksize=1) as rdr:
         probe = next(iter(rdr))
-    schema = spark.createDataFrame(probe).schema
 
-    def _read(batches):
+    def parse(f):
         import pandas as pd
 
-        for b in batches:
-            for f in b["f"]:
-                with pd.read_stata(f, chunksize=50_000) as rdr:
-                    yield from rdr
+        with pd.read_stata(f, chunksize=50_000) as rdr:
+            yield from rdr
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(_read, schema)
+    schema = spark.createDataFrame(probe).schema
+    return read_files(spark, files, ".dta", parse, schema)
 
 
 # --------------------------------------------------------------------------
@@ -115,30 +102,16 @@ def write_pickle(df: DataFrame, path: str) -> None:
     """Distributed pickle write: one part-*.pkl per Arrow batch (pickle is a
     single-object format, so per-batch files keep task memory at one batch
     instead of buffering the partition)."""
-    os.makedirs(path, exist_ok=True)
 
-    def _write(batches):
+    def render(batches, part):
         import uuid
 
-        import pandas as pd
-        from pyspark import TaskContext
-
-        rows = 0
-        pid = TaskContext.get().partitionId()
         for i, b in enumerate(batches):
-            if not len(b):
-                continue
-            b.to_pickle(
-                os.path.join(
-                    path, f"part-{pid:05d}-{i:04d}-{uuid.uuid4().hex}.pkl"
-                )
-            )
-            rows += len(b)
-        yield pd.DataFrame({"rows": [rows]})
+            name = f"part-{part.pid:05d}-{i:04d}-{uuid.uuid4().hex}.pkl"
+            with part.open(name) as fh:
+                b.to_pickle(fh)
 
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "pkl", render)
 
 
 def read_pickle(spark: SparkSession, path: str) -> DataFrame:
@@ -147,24 +120,9 @@ def read_pickle(spark: SparkSession, path: str) -> DataFrame:
     construction of write_pickle)."""
     import pandas as pd
 
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.pkl")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no .pkl files under {path}")
+    files = source_files(path, ".pkl", (".pkl",))
     schema = spark.createDataFrame(pd.read_pickle(files[0])).schema
-
-    def _read(batches):
-        import pandas as pd
-
-        for b in batches:
-            for f in b["f"]:
-                yield pd.read_pickle(f)
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(_read, schema)
+    return read_files(spark, files, ".pkl", pd.read_pickle, schema)
 
 
 # --------------------------------------------------------------------------
@@ -189,28 +147,12 @@ def write_html(df: DataFrame, path: str) -> None:
     like newlines into backslash escapes — lossy for a data roundtrip):
     cells entity-escape exactly &, <, > and nulls render as NaN, which
     read_html_tables reverses."""
-    os.makedirs(path, exist_ok=True)
 
-    def _write(batches):
-        import uuid
-
+    def render(batches, part):
         import pandas as pd
-        from pyspark import TaskContext
 
-        rows = 0
-        fh = None
-        try:
+        with part.open(text=True) as fh:
             for b in batches:
-                if not len(b):
-                    continue
-                if fh is None:
-                    pid = TaskContext.get().partitionId()
-                    fh = open(
-                        os.path.join(
-                            path, f"part-{pid:05d}-{uuid.uuid4().hex}.html"
-                        ),
-                        "w",
-                    )
                 out = ["<table>\n<thead>\n<tr>"]
                 out += [f"<th>{_esc_html(str(c))}</th>" for c in b.columns]
                 out.append("</tr>\n</thead>\n<tbody>\n")
@@ -224,15 +166,8 @@ def write_html(df: DataFrame, path: str) -> None:
                     out.append("</tr>\n")
                 out.append("</tbody>\n</table>\n")
                 fh.write("".join(out))
-                rows += len(b)
-        finally:
-            if fh is not None:
-                fh.close()
-        yield pd.DataFrame({"rows": [rows]})
 
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "html", render)
 
 
 def _unescape(col):
@@ -428,56 +363,37 @@ def write_excel(df: DataFrame, path: str) -> None:
     Cells omit the r= coordinate (readers, including this connector and
     pandas, infer positions) — sequential cells in a sequential row are
     valid OOXML and keep the per-cell payload minimal."""
-    os.makedirs(path, exist_ok=True)
 
-    def _write(batches):
-        import uuid
+    def render(batches, part):
         import zipfile
 
         import pandas as pd
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}-{uuid.uuid4().hex}.xlsx")
-        rows = 0
-        zf = None
-        try:
-            for b in batches:
-                if not len(b):
-                    continue
-                if zf is None:
-                    zf = zipfile.ZipFile(
-                        fname, "w", compression=zipfile.ZIP_DEFLATED
-                    )
-                    for name, xml in _XLSX_STATIC.items():
-                        zf.writestr(name, xml)
-                    sheet = zf.open(
-                        zipfile.ZipInfo("xl/worksheets/sheet1.xml"), "w"
-                    )
-                    sheet.write(
-                        b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                        b'<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-                        b"<sheetData>"
-                    )
-                    hdr = "".join(_xlsx_cell(c) for c in b.columns)
-                    sheet.write(f"<row>{hdr}</row>".encode())
-                for rec in b.itertuples(index=False):
-                    cells = "".join(
-                        _xlsx_cell(None if pd.isna(v) else v) for v in rec
-                    )
-                    sheet.write(f"<row>{cells}</row>".encode())
-                    rows += 1
-            if zf is not None:
+        with part.open() as fh, zipfile.ZipFile(
+            fh, "w", compression=zipfile.ZIP_DEFLATED
+        ) as zf:
+            for name, xml in _XLSX_STATIC.items():
+                zf.writestr(name, xml)
+            sheet_xml = zipfile.ZipInfo("xl/worksheets/sheet1.xml")
+            with zf.open(sheet_xml, "w") as sheet:
+                sheet.write(
+                    b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+                    b'<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
+                    b"<sheetData>"
+                )
+                header = None
+                for b in batches:
+                    if header is None:
+                        header = "".join(_xlsx_cell(c) for c in b.columns)
+                        sheet.write(f"<row>{header}</row>".encode())
+                    for rec in b.itertuples(index=False):
+                        cells = "".join(
+                            _xlsx_cell(None if pd.isna(v) else v) for v in rec
+                        )
+                        sheet.write(f"<row>{cells}</row>".encode())
                 sheet.write(b"</sheetData></worksheet>")
-                sheet.close()
-        finally:
-            if zf is not None:
-                zf.close()
-        yield pd.DataFrame({"rows": [rows]})
 
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "xlsx", render)
 
 
 def _xlsx_rows(fname: str):
@@ -520,13 +436,7 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
     to the probed type, so integer columns come back as longs."""
     import pandas as pd
 
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.xlsx")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no .xlsx files under {path}")
+    files = source_files(path, ".xlsx", (".xlsx",))
     it = _xlsx_rows(files[0])
     header = [str(c) for c in next(it)]
 
@@ -560,24 +470,18 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
         f"`{c}` {k}" for c, k in zip(header, kinds)
     )
 
-    def _read(batches):
-        for b in batches:
-            for f in b["f"]:
-                rows = _xlsx_rows(f)
-                cols = [str(c) for c in next(rows)]
-                data = list(rows)
-                pdf = pd.DataFrame(data, columns=cols)
-                for c, k in zip(header, kinds):
-                    if k == "bigint":
-                        pdf[c] = pdf[c].astype("Int64")
-                    elif k == "string":
-                        pdf[c] = pdf[c].map(
-                            lambda v: v if v is None else str(v)
-                        )
-                yield pdf[header]
+    def parse(f):
+        rows = _xlsx_rows(f)
+        cols = [str(c) for c in next(rows)]
+        pdf = pd.DataFrame(list(rows), columns=cols)
+        for c, k in zip(header, kinds):
+            if k == "bigint":
+                pdf[c] = pdf[c].astype("Int64")
+            elif k == "string":
+                pdf[c] = pdf[c].map(lambda v: v if v is None else str(v))
+        return pdf[header]
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(_read, schema)
+    return read_files(spark, files, ".xlsx", parse, schema)
 
 
 # --------------------------------------------------------------------------
@@ -764,29 +668,12 @@ def write_msgpack(df: DataFrame, path: str) -> None:
     consecutive row-maps into one part-*.msgpack (appended per Arrow
     batch — task memory stays at one batch). Values: int/float/str/bool/
     bytes/arrays/None; richer types should go through parquet."""
-    os.makedirs(path, exist_ok=True)
 
-    def _write(batches):
-        import uuid
-
+    def render(batches, part):
         import pandas as pd
-        from pyspark import TaskContext
 
-        rows = 0
-        fh = None
-        try:
+        with part.open() as fh:
             for b in batches:
-                if not len(b):
-                    continue
-                if fh is None:
-                    pid = TaskContext.get().partitionId()
-                    fh = open(
-                        os.path.join(
-                            path,
-                            f"part-{pid:05d}-{uuid.uuid4().hex}.msgpack",
-                        ),
-                        "wb",
-                    )
                 cols = list(b.columns)
                 buf = bytearray()
                 for rec in b.itertuples(index=False):
@@ -809,16 +696,9 @@ def write_msgpack(df: DataFrame, path: str) -> None:
                             v = None
                         d[c] = v
                     _mp_pack(d, buf)
-                    rows += 1
                 fh.write(bytes(buf))
-        finally:
-            if fh is not None:
-                fh.close()
-        yield pd.DataFrame({"rows": [rows]})
 
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "msgpack", render)
 
 
 def read_msgpack(spark: SparkSession, path: str) -> DataFrame:
@@ -830,13 +710,7 @@ def read_msgpack(spark: SparkSession, path: str) -> DataFrame:
     all-null columns fall back to string."""
     import pandas as pd
 
-    files = (
-        sorted(glob.glob(os.path.join(path, "*.msgpack")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no .msgpack files under {path}")
+    files = source_files(path, ".msgpack", (".msgpack",))
     with open(files[0], "rb") as fh:
         buf = fh.read()
     cols: list = []  # insertion-ordered union of keys over probed records
@@ -896,45 +770,27 @@ def read_msgpack(spark: SparkSession, path: str) -> DataFrame:
     # values in the data; stringify them so the Arrow cast can't fail
     str_cols = [c for c in cols if (kinds[c] or "string") == "string"]
 
-    def _read(batches):
-        for b in batches:
-            for f in b["f"]:
-                with open(f, "rb") as fh:
-                    fbuf = fh.read()
-                fpos, recs = 0, []
-                while fpos < len(fbuf):
-                    rec, fpos = _mp_unpack(fbuf, fpos)
-                    recs.append(rec)
-                pdf = pd.DataFrame(recs)
-                for c in str_cols:
-                    if c in pdf.columns:
-                        pdf[c] = pdf[c].map(
-                            lambda v: v
-                            if v is None or isinstance(v, str)
-                            else str(v)
-                        )
-                yield pdf
+    def parse(f):
+        with open(f, "rb") as fh:
+            fbuf = fh.read()
+        fpos, recs = 0, []
+        while fpos < len(fbuf):
+            rec, fpos = _mp_unpack(fbuf, fpos)
+            recs.append(rec)
+        pdf = pd.DataFrame(recs)
+        for c in str_cols:
+            if c in pdf.columns:
+                pdf[c] = pdf[c].map(
+                    lambda v: v if v is None or isinstance(v, str) else str(v)
+                )
+        return pdf
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(_read, schema)
+    return read_files(spark, files, ".msgpack", parse, schema)
 
 
 # --------------------------------------------------------------------------
 # unified Message.read / Message.to dispatch
 # --------------------------------------------------------------------------
-
-# write_sparse's exact part-name scheme: the retry/zombie dedup in
-# write_sparse and read_sparse keys on this and must NEVER match a
-# user-named file (part-1-matrixA.npz is user data, not a task attempt).
-_SPARSE_PART_RE = re.compile(r"part-(\d{5})-(?:[0-9a-f]{32}|empty)\.npz\Z")
-
-
-def _sparse_part_pid(name: str) -> str | None:
-    """Partition id when ``name`` matches write_sparse's own part scheme,
-    else None (foreign file — no attempt-dedup applies)."""
-    m = _SPARSE_PART_RE.fullmatch(name)
-    return m.group(1) if m else None
-
 
 def _savez_coo_part(
     dirpath: str,
@@ -996,14 +852,11 @@ def write_sparse(
     parallel, no driver materialization.
 
     Durability contract (``commit_protocol="rename"``, default): the
-    two-rename swap is atomic against JOB failure only (a failed Spark
-    job leaves the previous matrix intact). It is NOT atomic against a
-    hard process crash in the instant between the two renames (readers
-    would see no ``path``; the old data survives in a ``.old-*``
-    sibling) and offers no isolation between CONCURRENT writers to the
-    same path — serialize writers externally. Stale ``.tmp-*`` /
-    ``.old-*`` siblings left by a crashed writer are swept on the next
-    successful write to the same path.
+    two-rename swap of :func:`fireworks_spark.publish.swap_dir`, atomic
+    against JOB failure only (a failed Spark job leaves the previous
+    matrix intact). It is NOT atomic against a hard process crash
+    between the two renames and offers no isolation between CONCURRENT
+    writers to the same path — serialize writers externally.
 
     ``commit_protocol="manifest"`` removes the rename-semantics
     assumption entirely (fireworks_spark.publish): parts land in a new
@@ -1027,14 +880,19 @@ def write_sparse(
     written straight to their final names (PUT visibility makes the
     POSIX scratch+rename truncation guard unnecessary) and the manifest
     commits with one direct write). A remote executor writing into its
-    own local disk is detected after the job: the part-file count must
-    equal the number of tasks that reported rows, else this raises
-    RuntimeError."""
+    own local disk is detected after the job: every part a task reported
+    must be visible to the driver, else this raises RuntimeError
+    (:func:`fireworks_spark.publish.settle_parts`)."""
     import numpy as np
 
-    if shape is None:
-        from pyspark.sql import functions as F
+    from fireworks_spark import publish
 
+    if commit_protocol not in ("rename", "manifest"):
+        raise ValueError(
+            f"write_sparse: unknown commit_protocol {commit_protocol!r} "
+            "(expected 'rename' or 'manifest')"
+        )
+    if shape is None:
         r = df.agg(
             F.max(row_col).alias("r"), F.max(col_col).alias("c")
         ).collect()[0]
@@ -1045,138 +903,77 @@ def write_sparse(
             )
         shape = (int(r["r"]) + 1, int(r["c"]) + 1)
     nr, nc = int(shape[0]), int(shape[1])
-    # Atomic overwrite (the maintain_rollup_table two-rename swap): tasks
-    # write into a tmp directory and the swap happens only after the job
-    # succeeds, so a mid-write failure leaves the previous matrix intact
-    # — deleting stale parts in place would let a crashed job destroy the
-    # old data AND leave a partial new matrix that read_sparse silently
-    # accepts.
-    import shutil
-    import uuid as _uuid
-
-    if commit_protocol not in ("rename", "manifest"):
-        raise ValueError(
-            f"write_sparse: unknown commit_protocol {commit_protocol!r} "
-            "(expected 'rename' or 'manifest')"
-        )
     # Decided driver-side and captured in the task closure: executors must
     # not re-derive it (their env can differ from the driver's). Direct
     # part writes apply only under the manifest protocol — the rename
     # protocol's tmp dir is visible-by-swap, so its parts keep the POSIX
     # truncation guard even when the object-store switch is set (that
     # combination is a user error the loud two-rename failure surfaces).
-    from fireworks_spark import publish as _publish
-
-    direct_put = commit_protocol == "manifest" and _publish.object_store_semantics(
-        path
+    direct_put = (
+        commit_protocol == "manifest" and publish.object_store_semantics(path)
     )
-    if commit_protocol == "manifest":
-        from fireworks_spark import publish
 
-        gen, tmp = publish.new_generation(path)
-    else:
-        # sweep siblings stranded by a hard-crashed earlier writer (they
-        # are invisible to readers of `path` but leak disk forever
-        # otherwise)
-        for stale in glob.glob(f"{path}.tmp-*") + glob.glob(f"{path}.old-*"):
-            shutil.rmtree(stale, ignore_errors=True)
+    def stage(tmp):
+        def _write(batches):
+            import uuid
 
-        tmp = f"{path}.tmp-{_uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp)
+            import pandas as pd
+            from pyspark import TaskContext
 
-    def _write(batches):
-        import uuid
+            parts = [b for b in batches if len(b)]
+            names = []
+            if parts:
+                pdf = pd.concat(parts, ignore_index=True)
+                pid = TaskContext.get().partitionId()
+                base = f"part-{pid:05d}-{uuid.uuid4().hex}.npz"
+                # rationale for direct_put in _savez_coo_part
+                _savez_coo_part(
+                    tmp,
+                    base,
+                    nr,
+                    nc,
+                    pdf[row_col].to_numpy(dtype=np.int64),
+                    pdf[col_col].to_numpy(dtype=np.int64),
+                    pdf[val_col].to_numpy(dtype=np.float64),
+                    direct=direct_put,
+                )
+                names = [base]
+            yield pd.DataFrame({"name": pd.Series(names, dtype=object)})
 
-        import pandas as pd
-        from pyspark import TaskContext
-
-        parts = [b for b in batches if len(b)]
-        rows = 0
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            pid = TaskContext.get().partitionId()
-            base = f"part-{pid:05d}-{uuid.uuid4().hex}.npz"
-            # POSIX: scratch+rename so a killed attempt never leaves a
-            # truncated visible part; object-store semantics (direct_put,
-            # decided on the driver): straight to the final name, rename-
-            # free. Rationale in _savez_coo_part.
-            _savez_coo_part(
-                tmp,
-                base,
-                nr,
-                nc,
-                pdf[row_col].to_numpy(dtype=np.int64),
-                pdf[col_col].to_numpy(dtype=np.int64),
-                pdf[val_col].to_numpy(dtype=np.float64),
-                direct=direct_put,
-            )
-            rows = len(pdf)
-        yield pd.DataFrame({"rows": [rows]})
-
-    try:
-        # collect is bounded: one 1-row frame per task. The counts double
-        # as the shared-filesystem check — a remote executor writing to
-        # its own local disk leaves fewer parts in `tmp` than tasks that
-        # reported rows, which must fail loudly, not lose data silently.
-        task_rows = [
-            r["rows"]
+        names = [
+            r["name"]
             for r in df.select(row_col, col_col, val_col)
-            .mapInPandas(_write, "rows long")
+            .mapInPandas(_write, "name string")
             .collect()
         ]
-        writers = sum(1 for n in task_rows if n > 0)
-        # Count distinct PARTITION IDS, not files: a retried or speculative
-        # task attempt leaves an extra part-<pid>-<uuid>.npz for the same
-        # pid, which is duplicate data, not a missing-filesystem signal.
-        # Keep exactly one file per pid (lexicographically first — any
-        # completed attempt holds the identical triplets) and drop the
-        # stale duplicates so read_sparse never double-counts.
-        by_pid: dict = {}
-        for f in sorted(glob.glob(os.path.join(tmp, "*.npz"))):
-            pid = _sparse_part_pid(os.path.basename(f))
-            if pid is None:
-                continue  # cannot happen in our tmp dir; be precise anyway
-            if pid in by_pid:
-                os.remove(f)
-            else:
-                by_pid[pid] = f
-        if len(by_pid) != writers:
-            raise RuntimeError(
-                f"write_sparse: {writers} tasks reported triplets but "
-                f"parts from {len(by_pid)} distinct partitions landed in "
-                f"{tmp} — driver and executors do not share this "
-                "filesystem (see the filesystem contract in the docstring)"
-            )
-        if not glob.glob(os.path.join(tmp, "*.npz")):
+        if not names:
             # all partitions were empty (legal when shape pins the dims):
             # write one zero-nnz part so read_sparse round-trips the shape
-            np.savez_compressed(
-                os.path.join(tmp, "part-00000-empty.npz"),
-                format=np.array(b"coo"),
-                shape=np.array([nr, nc], dtype=np.int64),
-                row=np.array([], dtype=np.int64),
-                col=np.array([], dtype=np.int64),
-                data=np.array([], dtype=np.float64),
+            e = np.array([], dtype=np.int64)
+            names = ["part-00000-empty.npz"]
+            _savez_coo_part(
+                tmp, names[0], nr, nc, e, e, e.astype(np.float64),
+                direct=direct_put,
             )
+        return names
+
+    if commit_protocol == "rename":
+        publish.swap_dir(path, stage)
+        return
+    # Commit = one manifest write naming the checked parts; the generation
+    # directory itself never moves (object-store-safe).
+    gen, tmp = publish.new_generation(path)
+    try:
+        names = stage(tmp)
+        publish.settle_parts(tmp, names)
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    if commit_protocol == "manifest":
-        # Commit = one manifest write naming the post-dedup parts; the
-        # generation directory itself never moves (object-store-safe).
-        from fireworks_spark import publish
-
-        publish.commit_generation(
-            path, gen, tmp,
-            sorted(glob.glob(os.path.join(tmp, "*.npz"))),
-            keep=keep_generations,
-        )
-        return
-    old = f"{path}.old-{_uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    publish.commit_generation(
+        path, gen, tmp,
+        sorted(os.path.join(tmp, n) for n in names),
+        keep=keep_generations,
+    )
 
 
 def read_sparse(spark: SparkSession, path: str) -> DataFrame:
@@ -1187,61 +984,39 @@ def read_sparse(spark: SparkSession, path: str) -> DataFrame:
     before handing them to a cluster. Manifested directories (written
     with ``commit_protocol="manifest"``) read ONLY the newest committed
     generation's parts — a crashed writer's uncommitted files are
-    invisible by construction."""
+    invisible by construction. A plain directory keeps one part per
+    partition id (:func:`fireworks_spark.connector.source_files`), so a
+    zombie attempt's duplicate part is never double-counted, while
+    files outside write_sparse's part scheme are all read."""
     from fireworks_spark import publish
 
     if os.path.isdir(path) and publish.has_manifest(path):
-        files = [f for f in publish.current_files(path) if f.endswith(".npz")]
-    elif os.path.isdir(path):
-        # Keep one part per partition id: a zombie speculative attempt
-        # can land a duplicate part-<pid>-* AFTER write_sparse's own
-        # dedup scan; any completed attempt holds identical triplets
-        # (parts are written atomically — see _write), so reading the
-        # lexicographically-first per pid never double-counts. The dedup
-        # applies ONLY to names matching write_sparse's exact scheme
-        # (part-<5 digits>-<32 hex>.npz) — a hand-assembled directory
-        # whose files merely LOOK part-like (part-1-matrixA.npz,
-        # part-1-matrixB.npz) holds distinct user data, and every such
-        # file is read.
-        by_pid: dict = {}
-        extra = []
-        for f in sorted(glob.glob(os.path.join(path, "*.npz"))):
-            pid = _sparse_part_pid(os.path.basename(f))
-            if pid is not None:
-                by_pid.setdefault(pid, f)
-            else:  # foreign (e.g. scipy save_npz) file: no pid scheme
-                extra.append(f)
-        files = sorted(by_pid.values()) + extra
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no .npz files under {path}")
+        path = [f for f in publish.current_files(path) if f.endswith(".npz")]
+    return read_files(
+        spark, path, ".npz", _read_coo, "row long, col long, value double",
+        exts=(".npz",),
+    )
 
-    def _read(batches):
-        import numpy as np
-        import pandas as pd
 
-        for b in batches:
-            for f in b["f"]:
-                z = np.load(f)
-                fmt = bytes(z["format"]).decode()
-                if fmt != "coo":
-                    raise ValueError(
-                        f"{f}: sparse format {fmt!r}; only COO parts are "
-                        "readable without scipy — convert via "
-                        "scipy.sparse.coo_matrix first"
-                    )
-                yield pd.DataFrame(
-                    {
-                        "row": z["row"].astype("int64"),
-                        "col": z["col"].astype("int64"),
-                        "value": z["data"].astype("float64"),
-                    }
-                )
+def _read_coo(f: str):
+    """One COO ``.npz`` part as (row, col, value) triplets."""
+    import numpy as np
+    import pandas as pd
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read, "row long, col long, value double"
+    z = np.load(f)
+    fmt = bytes(z["format"]).decode()
+    if fmt != "coo":
+        raise ValueError(
+            f"{f}: sparse format {fmt!r}; only COO parts are "
+            "readable without scipy — convert via "
+            "scipy.sparse.coo_matrix first"
+        )
+    return pd.DataFrame(
+        {
+            "row": z["row"].astype("int64"),
+            "col": z["col"].astype("int64"),
+            "value": z["data"].astype("float64"),
+        }
     )
 
 

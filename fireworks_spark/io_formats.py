@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from fireworks_spark.connector import read_files, source_files, write_parts
+
 _READ_OPTS = {
     "csv": {"header": "true"},
     "json": {},
@@ -156,105 +158,57 @@ def zorder_sort(
 # --------------------------------------------------------------------------
 #
 # Spark has no built-in feather source, but pyarrow ships in every executor's
-# Python, so the connector is a file-parallel mapInPandas: one task per
-# file on read, one file per partition on write — the same
-# embarrassingly-parallel layout every Spark file source uses, just with
-# Arrow IPC instead of parquet as the on-disk bytes. Zero driver data
+# Python, so the connector uses the shared file-connector skeleton
+# (connector.py): one task per file on read; on write, each partition
+# streams into one part file under a dot-prefixed scratch name, renamed into
+# a staging directory that publish.swap_dir swaps into place. Writing to an
+# existing path replaces its contents (pandas to_feather's contract) and a
+# failed write leaves the previous output readable. Zero driver data
 # movement; the driver only reads one schema footer.
 
 
-def read_feather(
-    spark: SparkSession,
-    path: str,
-    tasks_per_file: int = 1,
-) -> DataFrame:
+def read_feather(spark: SparkSession, path: str) -> DataFrame:
     """Distributed read of a feather file or directory of feather files.
 
     The driver lists files and reads ONE schema (footer-only); the data is
     read inside Arrow-batched Python tasks, one file per task, so the scan
     parallelizes across executors like any file source. Files must share a
     schema (first file wins, mismatches raise inside the task)."""
-    import glob
-    import os
-
     import pyarrow.feather as pf
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    if os.path.isdir(path):
-        files = sorted(
-            glob.glob(os.path.join(path, "*.feather"))
-            + glob.glob(os.path.join(path, "*.arrow"))
-        )
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no feather files under {path}")
+    files = source_files(path, "feather", (".feather", ".arrow"))
     schema = from_arrow_schema(
         pf.read_table(files[0], memory_map=True).schema,
         prefer_timestamp_ntz=True,
     )
-
-    def _read(batches):
-        import pyarrow.feather as pf  # re-import inside the task
-
-        for b in batches:
-            for f in b["f"]:
-                yield pf.read_table(f).to_pandas()
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files) * tasks_per_file).mapInPandas(
-        _read, schema
+    return read_files(
+        spark, files, "feather", lambda f: pf.read_table(f).to_pandas(), schema
     )
 
 
 def write_feather(df: DataFrame, path: str, compression: str = "zstd") -> None:
     """Distributed write: each partition streams its Arrow batches into one
-    ``part-NNNNN.feather`` file under ``path`` (directory-of-parts, the
-    Spark sink layout). Local/NFS filesystems only — a cloud deployment
-    would swap the open() for the relevant filesystem client; the
+    ``part-*.feather`` file under ``path`` (directory-of-parts, the Spark
+    sink layout). Local/NFS filesystems only — a cloud deployment would
+    swap the file handle for the relevant filesystem client; the
     per-partition shape is unchanged."""
-    import os
-    import uuid
 
-    os.makedirs(path, exist_ok=True)
-    comp = compression
-
-    def _write(batches):
-        import pandas as pd
+    def render(batches, part):
         import pyarrow as pa
-        from pyspark import TaskContext
 
         # Feather V2 == the Arrow IPC file format, so appending each Arrow
         # batch through a RecordBatchFileWriter as it arrives keeps task
         # memory at one batch (maxRecordsPerBatch) instead of buffering the
         # whole partition in a pd.concat.
-        rows = 0
-        writer = sink = None
-        try:
+        with part.open() as fh:
+            writer = None
             for b in batches:
-                if not len(b):
-                    continue
                 t = pa.Table.from_pandas(b, preserve_index=False)
                 if writer is None:
-                    pid = TaskContext.get().partitionId()
-                    fname = os.path.join(
-                        path, f"part-{pid:05d}-{uuid.uuid4().hex}.feather"
-                    )
-                    sink = pa.OSFile(fname, "wb")
-                    writer = pa.ipc.new_file(
-                        sink,
-                        t.schema,
-                        options=pa.ipc.IpcWriteOptions(compression=comp),
-                    )
+                    opts = pa.ipc.IpcWriteOptions(compression=compression)
+                    writer = pa.ipc.new_file(fh, t.schema, options=opts)
                 writer.write_table(t)
-                rows += t.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-                sink.close()
-        yield pd.DataFrame({"rows": [rows]})
+            writer.close()
 
-    # the action IS the write; the returned manifest is one row per task
-    df.mapInPandas(_write, "rows long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    write_parts(df, path, "feather", render)

@@ -16,6 +16,7 @@ all-pairs operators exist for verification and for small/medium tables.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import Column, DataFrame, Window
@@ -23,6 +24,8 @@ from pyspark.sql import functions as F
 
 from fireworks_spark.functions.rounding import pround
 from fireworks_spark.functions.text import normalize_text, words
+
+_log = logging.getLogger(__name__)
 
 # Operators below persist intermediate frames (shingle sets) that several
 # branches of one query DAG share. The persist is load-bearing — without it
@@ -2096,11 +2099,13 @@ def release_bloom_broadcasts() -> None:
     above its literal threshold (the release path mirroring
     :func:`release_caches`). Call once the probing queries are
     materialized; subsequent probes simply re-broadcast."""
-    for bc in _BLOOM_BROADCASTS.values():
+    for key, bc in _BLOOM_BROADCASTS.items():
         try:
             bc.destroy()
         except Exception:
-            pass
+            _log.warning(
+                "bloom broadcast %s: destroy() failed", key, exc_info=True
+            )
     _BLOOM_BROADCASTS.clear()
 
 

@@ -131,6 +131,6 @@ def _series_val_eq(x: Any, y: Any) -> bool:
 
         if isinstance(x, decimal.Decimal) or isinstance(y, decimal.Decimal):
             return _values_equal(float(x), float(y))
-    except Exception:
+    except (TypeError, ValueError, ArithmeticError):
         pass
     return x == y

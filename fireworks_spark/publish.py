@@ -1,12 +1,16 @@
-"""Object-store-safe table publication: a manifest commit protocol.
+"""Directory publication: the two-rename swap and a manifest commit
+protocol.
 
-The two continuously re-published artifacts in this engine — the sparse
-matrix directory (edge_formats.write_sparse) and the streaming rollup table
-(streaming.maintain_rollup_table) — default to a two-rename directory swap.
+Every directory this engine re-publishes — the file-format connectors'
+part directories (connector.write_parts), the sparse matrix directory
+(edge_formats.write_sparse), the streaming rollup table
+(streaming.maintain_rollup_table) and database.Table's rewrites — goes
+through :func:`swap_dir`, a two-rename directory swap by default.
 That is atomic against job failure but assumes RENAME SEMANTICS, which
 object stores (S3/GCS/ABFS) do not have: their "rename" is copy+delete,
-non-atomic and O(data). This module is the rename-free alternative
-(``commit_protocol="manifest"``), the same commit shape Iceberg/Delta use:
+non-atomic and O(data). The sparse matrix and the rollup table also offer
+the rename-free alternative below (``commit_protocol="manifest"``), the
+same commit shape Iceberg/Delta use:
 
 1. the writer materializes a new GENERATION of immutable data files under
    ``<path>/gen-<n>-<uuid>/`` — unique names, never overwritten;
@@ -34,6 +38,7 @@ of the same durability contract for file-backed artifacts.
 
 from __future__ import annotations
 
+import collections
 import glob
 import json
 import os
@@ -92,6 +97,77 @@ def object_store_semantics(path: "str | None" = None) -> bool:
         "true",
         "yes",
     )
+
+
+def swap_dir(path: str, stage) -> None:
+    """Publish directory ``path`` by write-then-swap. ``stage(tmp)``
+    fills a fresh sibling staging directory. When it returns the names
+    its tasks reported publishing, :func:`settle_parts` checks them
+    against what landed; a Spark-committed stage returns None. Then
+    ``path`` is renamed aside, the staging directory renamed into its
+    place, and the old copy removed; if the second rename fails, the old
+    copy is renamed back.
+
+    A rerun replaces the previous output and a failed stage leaves it
+    untouched. The swap is not atomic against a hard crash between the
+    two renames (readers then see no ``path``; the old data survives in
+    a ``.old-*`` sibling) and gives no isolation between concurrent
+    writers of one path. Stale ``.tmp-*`` / ``.old-*`` siblings of a
+    crashed writer are swept on the next write."""
+    base = glob.escape(path)
+    for stale in glob.glob(base + ".tmp-*") + glob.glob(base + ".old-*"):
+        shutil.rmtree(stale, ignore_errors=True)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    os.makedirs(tmp)
+    try:
+        names = stage(tmp)
+        if names is not None:
+            settle_parts(tmp, names)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
+    moved = os.path.exists(path)
+    if moved:
+        os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        if moved:
+            os.rename(old, path)  # rollback
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def settle_parts(dirpath: str, names: list[str]) -> None:
+    """The written-vs-reported check of a staged part directory.
+    ``names`` are the files the successful task attempts reported. A
+    name reported twice means two records claimed one file (duplicate
+    record ids); a reported name that did not land means the executors
+    wrote to a filesystem the driver does not see. Both raise. Files no
+    task reported, left by failed, retried or speculative attempts, are
+    deleted."""
+    counts = collections.Counter(names)
+    dup = sorted(n for n, c in counts.items() if c > 1)
+    if dup:
+        raise RuntimeError(
+            f"part write: {len(dup)} file names were written by more than "
+            f"one record (duplicate record ids?): {dup[:3]}"
+        )
+    present = set(os.listdir(dirpath))
+    missing = sorted(counts.keys() - present)
+    if missing:
+        raise RuntimeError(
+            f"part write: tasks reported {len(names)} files but "
+            f"{len(missing)} are missing from {dirpath}, e.g. {missing[0]} "
+            "— driver and executors do not share this filesystem"
+        )
+    for n in present - counts.keys():
+        f = os.path.join(dirpath, n)
+        if os.path.isdir(f):
+            shutil.rmtree(f, ignore_errors=True)
+        else:
+            os.remove(f)
 
 
 def _manifests(path: str) -> list[tuple[int, str]]:

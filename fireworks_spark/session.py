@@ -36,6 +36,20 @@ def _host_profile_env() -> dict[str, str]:
     }
 
 
+def _worker_path_env() -> dict[str, str]:
+    """PYTHONPATH with this package's parent directory first, set BEFORE
+    the JVM launches: the Python workers it forks inherit the variable,
+    so worker functions that refer to fireworks_spark helpers import
+    them whatever the driver's working directory is. Nothing else ships
+    the package to local workers."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    parts = [p for p in parts if p]
+    if root in parts:
+        return {}
+    return {"PYTHONPATH": os.pathsep.join([root] + parts)}
+
+
 def _host_profile_conf(driver_mem: str) -> dict[str, str]:
     """Spark confs mitigating the same pathology, each env-overridable:
 
@@ -90,6 +104,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     for k, v in _host_profile_env().items():
         os.environ.setdefault(k, v)  # before the JVM starts; no-op after
+    os.environ.update(_worker_path_env())
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -7,12 +7,22 @@ splits the file into one row per record at scan time (splittable,
 distributed), and the field extraction is pure JVM string expressions.
 Column names match the reference Message: ids, names, descriptions,
 sequences, dbxrefs (pipes.py:37-44).
+
+Formats whose records cannot be carved out at scan time (alignments,
+binary containers, XML) are file-parallel connectors on the shared
+skeleton in connector.py: each reader is a ``parse(file)`` handed to
+``read_files``, each writer a render function handed to ``write_parts``
+(through :func:`_write_rows` for the one-file-per-partition formats).
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fireworks_spark.connector import read_files, write_parts
 
 
 def read_fasta(spark: SparkSession, path: str) -> DataFrame:
@@ -577,56 +587,59 @@ def read_tab(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _bioseq_rows(names_chunks, descriptions=""):
-    """(name, [chunk, ...]) pairs -> the reference Message columns."""
+_SEQ_SCHEMA = (
+    "ids string, names string, descriptions string, sequences string, "
+    "dbxrefs array<string>"
+)
+_SEQ_QUAL_SCHEMA = _SEQ_SCHEMA + ", qualities array<int>"
+
+
+def _seq_frame(ids, seqs, descs=None, names=None, dbxrefs=None, quals=None):
+    """The reference Message columns for parsed records; names default
+    to ids, descriptions to "", dbxrefs to []; ``quals`` adds the
+    qualities column."""
     import pandas as pd
 
-    names = [n for n, _ in names_chunks]
-    return pd.DataFrame(
-        {
-            "ids": names,
-            "names": names,
-            "descriptions": [descriptions] * len(names),
-            "sequences": ["".join(cs) for _, cs in names_chunks],
-            "dbxrefs": [[] for _ in names],
-        }
-    )
+    cols = {
+        "ids": list(ids),
+        "names": list(ids if names is None else names),
+        "descriptions": [""] * len(ids) if descs is None else list(descs),
+        "sequences": list(seqs),
+        "dbxrefs": [[] for _ in ids] if dbxrefs is None else list(dbxrefs),
+    }
+    if quals is not None:
+        cols["qualities"] = list(quals)
+    return pd.DataFrame(cols)
 
 
-def _source_files(path: str, label: str) -> "list[str]":
-    """Sorted non-hidden files under ``path`` (or ``[path]`` for a file),
-    with read-side retry/zombie dedup mirroring read_sparse: a speculative
-    or zombie task attempt that renames its part VISIBLE after
-    :func:`_publish_alignment_dir`'s write-side scan leaves two
-    part-<pid>-* files for one partition; without this, every record of
-    that partition is read twice. Keep the lexicographically-first file
-    per pid (the list is sorted; any completed attempt holds identical
-    content) for names matching the writers' exact part scheme, and keep
-    all non-matching files as-is."""
-    import glob as _glob
-    import os as _os
+def _unzip(recs: list, k: int) -> list:
+    """Columns of a list of k-tuples (k empty columns for no records)."""
+    return list(zip(*recs)) or [()] * k
 
-    files = (
-        sorted(
-            f
-            for f in _glob.glob(_os.path.join(path, "*"))
-            if _os.path.isfile(f) and not _os.path.basename(f).startswith((".", "_"))
+
+def _rows(batches, *cols):
+    """String tuples of ``cols`` for every row of ``batches``; a None
+    column reads as "" in every row."""
+    for b in batches:
+        yield from zip(
+            *[b[c].astype(str) if c else [""] * len(b) for c in cols]
         )
-        if _os.path.isdir(path)
-        else [path]
-    )
-    seen_pids: set = set()
-    kept = []
-    for f in files:
-        pid = _aln_part_pid(_os.path.basename(f))
-        if pid is not None:
-            if pid in seen_pids:
-                continue
-            seen_pids.add(pid)
-        kept.append(f)
-    if not kept:
-        raise FileNotFoundError(f"no {label} files under {path}")
-    return kept
+
+
+def _write_rows(df, path, ext, cols, render, text=True) -> None:
+    """One ``part-*.<ext>`` file per non-empty partition:
+    ``render(fh, rows, pid)`` validates the partition's rows (see
+    :func:`_rows`) and writes them. Published by
+    :func:`fireworks_spark.connector.write_parts`: a rerun replaces the
+    previous output, a failed job leaves it intact."""
+
+    def _render(batches, part):
+        rows = list(_rows(batches, *cols))
+        with part.open(text=text) as fh:
+            render(fh, rows, part.pid)
+
+    selected = dict.fromkeys(c for c in cols if c)  # ordered, no duplicates
+    write_parts(df.select(*selected), path, ext, _render)
 
 
 def _alignment_read(spark: SparkSession, path: str, parse) -> DataFrame:
@@ -634,32 +647,19 @@ def _alignment_read(spark: SparkSession, path: str, parse) -> DataFrame:
     file = one alignment whose taxa INTERLEAVE across blocks, so the
     parallel unit is the FILE, not the line (the same shape as the
     xlsx/msgpack codecs — file-parallel Python parse, never a driver
-    loop). ``parse(text) -> [(name, [chunk, ...]), ...]``."""
-    files = _source_files(path, "alignment")
+    loop). ``parse(text) -> [(name, [chunk, ...]), ...]``; stockholm's
+    parser returns ``(pairs, desc_map)`` for its #=GS DE descriptions."""
 
-    def _read(batches):
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    out = parse(fh.read())
-                # stockholm carries per-sequence descriptions (#=GS DE):
-                # its parser returns (pairs, desc_map) instead of pairs
-                if isinstance(out, tuple):
-                    pairs, descs = out
-                    pdf = _bioseq_rows(pairs)
-                    pdf["descriptions"] = [
-                        descs.get(n, "") for n, _ in pairs
-                    ]
-                    yield pdf
-                else:
-                    yield _bioseq_rows(out)
+    def _parse(f):
+        out = parse(Path(f).read_text(encoding="utf-8"))
+        pairs, descs = out if isinstance(out, tuple) else (out, {})
+        return _seq_frame(
+            [n for n, _ in pairs],
+            ["".join(cs) for _, cs in pairs],
+            descs=[descs.get(n, "") for n, _ in pairs],
+        )
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "alignment", _parse, _SEQ_SCHEMA)
 
 
 def _parse_phylip(text: str, relaxed: bool) -> list:
@@ -864,69 +864,6 @@ def read_clustal(spark: SparkSession, path: str) -> DataFrame:
     return _alignment_read(spark, path, _parse_clustal)
 
 
-def _aln_part_pid(name: str):
-    """Partition id when ``name`` matches the alignment writers' exact
-    part scheme (the retry/zombie dedup keys on it), else None."""
-    import re
-
-    m = re.fullmatch(
-        r"part-(\d{5})-[0-9a-f]{32}"
-        r"\.(?:phy|aln|sto|nex|ig|phd|xml|2bit|cif)\Z",
-        name,
-    )
-    return m.group(1) if m else None
-
-
-def _publish_alignment_dir(job, path: str) -> None:
-    """Write-then-swap publication shared by write_phylip/write_clustal —
-    the same protocol as edge_formats.write_sparse's rename path. ``job``
-    runs the Spark write INTO a fresh staging directory and returns the
-    per-task written-row counts; on success the staging dir atomically
-    replaces ``path`` (a rerun REPLACES the previous output instead of
-    appending a second set of uuid-named parts, and a mid-job failure
-    leaves the previous output untouched). Retried/speculative task
-    attempts leave duplicate part-<pid>-* files; exactly one per pid
-    survives (any completed attempt holds the identical alignment). The
-    part-count-vs-writer check catches a non-shared filesystem loudly."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    for stale in glob.glob(f"{path}.tmp-*") + glob.glob(f"{path}.old-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp)
-    try:
-        task_rows = job(tmp)
-        writers = sum(1 for n in task_rows if n > 0)
-        by_pid: dict = {}
-        for f in sorted(glob.glob(os.path.join(tmp, "part-*"))):
-            pid = _aln_part_pid(os.path.basename(f))
-            if pid is None:
-                continue
-            if pid in by_pid:
-                os.remove(f)
-            else:
-                by_pid[pid] = f
-        if len(by_pid) != writers:
-            raise RuntimeError(
-                f"alignment write: {writers} tasks reported records but "
-                f"parts from {len(by_pid)} distinct partitions landed in "
-                f"{tmp} — driver and executors do not share this "
-                "filesystem (see edge_formats.write_sparse's filesystem "
-                "contract)"
-            )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def write_phylip(
     df: DataFrame,
     path: str,
@@ -938,55 +875,25 @@ def write_phylip(
     padded/truncated to the strict 10 columns; all sequences in one file
     must share a length — PHYLIP is an ALIGNMENT format, enforced per
     file). The read side reassembles partition files into one frame.
-    Publication is write-then-swap (:func:`_publish_alignment_dir`): a
-    rerun replaces the previous output; a failed job leaves it intact."""
+    A rerun replaces the previous output; a failed job leaves it intact
+    (:func:`_write_rows`)."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str))
+    def render(fh, rows, pid):
+        ln = {len(s) for _, s in rows}
+        if len(ln) != 1:
+            raise ValueError(
+                "write_phylip: sequences in one alignment must "
+                f"share a length, got lengths {sorted(ln)[:5]}"
+            )
+        fh.write(f" {len(rows)} {ln.pop()}\n")
+        for name, seq in rows:
+            if len(name) > 10:
+                raise ValueError(
+                    f"write_phylip: strict names cap at 10 chars: {name!r}"
                 )
-            if rows:
-                ln = {len(s) for _, s in rows}
-                if len(ln) != 1:
-                    raise ValueError(
-                        "write_phylip: sequences in one alignment must "
-                        f"share a length, got lengths {sorted(ln)[:5]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.phy"
-                # dot-prefixed scratch + rename: a task killed mid-write
-                # must never leave a visible truncated part (the pid
-                # dedup could keep it over a completed retry's file)
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write(f" {len(rows)} {ln.pop()}\n")
-                    for name, seq in rows:
-                        if len(name) > 10:
-                            raise ValueError(
-                                "write_phylip: strict names cap at 10 "
-                                f"chars: {name!r}"
-                            )
-                        fh.write(f"{name:<10}{seq}\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
+            fh.write(f"{name:<10}{seq}\n")
 
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "phy", (id_col, seq_col), render)
 
 
 def write_clustal(
@@ -998,49 +905,21 @@ def write_clustal(
 ) -> None:
     """Distributed CLUSTAL write: each partition becomes one ``part-*.aln``
     alignment under ``path``, chunked at ``wrap`` sites per block.
-    Publication is write-then-swap (:func:`_publish_alignment_dir`): a
-    rerun replaces the previous output; a failed job leaves it intact."""
+    A rerun replaces the previous output; a failed job leaves it intact
+    (:func:`_write_rows`)."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
+    def render(fh, rows, pid):
+        width = max(len(n) for n, _ in rows) + 4
+        longest = max(len(s) for _, s in rows)
+        fh.write("CLUSTAL W (1.0) multiple sequence alignment\n")
+        for off in range(0, longest, wrap):
+            fh.write("\n")
+            for name, seq in rows:
+                chunk = seq[off:off + wrap]
+                if chunk:
+                    fh.write(f"{name:<{width}}{chunk}\n")
 
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str))
-                )
-            if rows:
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.aln"
-                width = max(len(n) for n, _ in rows) + 4
-                longest = max(len(s) for _, s in rows)
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write(
-                        "CLUSTAL W (1.0) multiple sequence alignment\n"
-                    )
-                    for off in range(0, longest, wrap):
-                        fh.write("\n")
-                        for name, seq in rows:
-                            chunk = seq[off:off + wrap]
-                            if chunk:
-                                fh.write(f"{name:<{width}}{chunk}\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "aln", (id_col, seq_col), render)
 
 
 def _parse_stockholm(text: str):
@@ -1116,83 +995,45 @@ def write_stockholm(
     """Distributed Stockholm write: each partition becomes one
     ``part-*.sto`` alignment under ``path`` (canonical Pfam layout: one
     unwrapped line per sequence, optional ``#=GS DE`` rows, ``//``
-    terminator). Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    terminator). Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                descs = (
-                    b[desc_col].astype(str)
-                    if desc_col is not None
-                    else [""] * len(b)
-                )
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str), descs)
-                )
-            if rows:
-                bad = [
-                    n
-                    for n, _, _ in rows
-                    if any(c.isspace() for c in n)
-                    or n.startswith("#")
-                    or n == "//"
-                ]
-                if bad:
-                    raise ValueError(
-                        "write_stockholm: sequence names cannot contain "
-                        "whitespace, start with '#', or be '//' — the "
-                        "format has no quoting, so such names would be "
-                        f"read back as annotations/terminators: {bad[:3]}"
-                    )
-                bad_desc = [
-                    n
-                    for n, _, d in rows
-                    if "\n" in d or "\r" in d
-                ]
-                if bad_desc:
-                    raise ValueError(
-                        "write_stockholm: descriptions cannot contain "
-                        "newlines — a split '#=GS ... DE' line is reparsed "
-                        f"as a sequence row for a phantom taxon: "
-                        f"{bad_desc[:3]}"
-                    )
-                empty = [n for n, s, _ in rows if not s]
-                if empty:
-                    raise ValueError(
-                        "write_stockholm: empty sequences produce a "
-                        "name-only line that read_stockholm rejects as "
-                        f"malformed: {empty[:3]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.sto"
-                width = max(len(n) for n, _, _ in rows) + 2
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write("# STOCKHOLM 1.0\n")
-                    for name, _, desc in rows:
-                        if desc:
-                            fh.write(f"#=GS {name} DE {desc}\n")
-                    for name, seq, _ in rows:
-                        fh.write(f"{name:<{width}}{seq}\n")
-                    fh.write("//\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        cols = [id_col, seq_col] + ([desc_col] if desc_col else [])
-        return [
-            r["n"]
-            for r in df.select(*cols).mapInPandas(_write, "n long").collect()
+    def render(fh, rows, pid):
+        bad = [
+            n
+            for n, _, _ in rows
+            if any(c.isspace() for c in n) or n.startswith("#") or n == "//"
         ]
+        if bad:
+            raise ValueError(
+                "write_stockholm: sequence names cannot contain "
+                "whitespace, start with '#', or be '//' — the "
+                "format has no quoting, so such names would be "
+                f"read back as annotations/terminators: {bad[:3]}"
+            )
+        bad_desc = [n for n, _, d in rows if "\n" in d or "\r" in d]
+        if bad_desc:
+            raise ValueError(
+                "write_stockholm: descriptions cannot contain "
+                "newlines — a split '#=GS ... DE' line is reparsed "
+                f"as a sequence row for a phantom taxon: {bad_desc[:3]}"
+            )
+        empty = [n for n, s, _ in rows if not s]
+        if empty:
+            raise ValueError(
+                "write_stockholm: empty sequences produce a "
+                "name-only line that read_stockholm rejects as "
+                f"malformed: {empty[:3]}"
+            )
+        width = max(len(n) for n, _, _ in rows) + 2
+        fh.write("# STOCKHOLM 1.0\n")
+        for name, _, desc in rows:
+            if desc:
+                fh.write(f"#=GS {name} DE {desc}\n")
+        for name, seq, _ in rows:
+            fh.write(f"{name:<{width}}{seq}\n")
+        fh.write("//\n")
 
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "sto", (id_col, seq_col, desc_col), render)
 
 
 def _parse_nexus(text: str) -> list:
@@ -1297,77 +1138,38 @@ def write_nexus(
     data block under ``path`` (``datatype=standard`` — sequences are
     written verbatim; NEXUS is an ALIGNMENT format, so all sequences in
     one file must share a length, enforced like write_phylip). Names
-    with whitespace are quoted. Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    with whitespace are quoted. Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
+    def _q(n: str) -> str:
+        return f"'{n}'" if any(c.isspace() for c in n) else n
 
-            import pandas as pd
-            from pyspark import TaskContext
+    def render(fh, rows, pid):
+        badq = [n for n, _ in rows if any(c in n for c in "'\";[]")]
+        if badq:
+            raise ValueError(
+                "write_nexus: taxon names cannot contain quote "
+                "characters (the reader does not unescape doubled "
+                "quotes), ';' (terminates the matrix on read), or "
+                "'['/']' (stripped as NEXUS comments on read): "
+                f"{badq[:3]}"
+            )
+        nchar = {len(s) for _, s in rows}
+        if len(nchar) > 1:
+            raise ValueError(
+                "write_nexus: NEXUS is an alignment format — all "
+                f"sequences in one file must share a length, got "
+                f"{sorted(nchar)[:5]}"
+            )
+        width = max(len(_q(n)) for n, _ in rows) + 2
+        fh.write("#NEXUS\nbegin data;\n")
+        fh.write(f"  dimensions ntax={len(rows)} nchar={nchar.pop()};\n")
+        fh.write("  format datatype=standard gap=- missing=?;\n")
+        fh.write("  matrix\n")
+        for name, seq in rows:
+            fh.write(f"    {_q(name):<{width}}{seq}\n")
+        fh.write("  ;\nend;\n")
 
-            rows = []
-            for b in batches:
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str))
-                )
-            if rows:
-                badq = [
-                    n
-                    for n, _ in rows
-                    if any(c in n for c in "'\";[]")
-                ]
-                if badq:
-                    raise ValueError(
-                        "write_nexus: taxon names cannot contain quote "
-                        "characters (the reader does not unescape doubled "
-                        "quotes), ';' (terminates the matrix on read), or "
-                        "'['/']' (stripped as NEXUS comments on read): "
-                        f"{badq[:3]}"
-                    )
-                nchar = {len(s) for _, s in rows}
-                if len(nchar) > 1:
-                    raise ValueError(
-                        "write_nexus: NEXUS is an alignment format — all "
-                        f"sequences in one file must share a length, got "
-                        f"{sorted(nchar)[:5]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.nex"
-
-                def _q(n: str) -> str:
-                    return f"'{n}'" if any(c.isspace() for c in n) else n
-
-                width = max(len(_q(n)) for n, _ in rows) + 2
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write("#NEXUS\n")
-                    fh.write("begin data;\n")
-                    fh.write(
-                        f"  dimensions ntax={len(rows)} "
-                        f"nchar={next(iter(nchar))};\n"
-                    )
-                    fh.write(
-                        "  format datatype=standard gap=- missing=?;\n"
-                    )
-                    fh.write("  matrix\n")
-                    for name, seq in rows:
-                        fh.write(f"    {_q(name):<{width}}{seq}\n")
-                    fh.write("  ;\n")
-                    fh.write("end;\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "nex", (id_col, seq_col), render)
 
 
 def _parse_ace(text: str) -> list:
@@ -1467,46 +1269,14 @@ def read_ace(spark: SparkSession, path: str) -> DataFrame:
     dbxrefs + ``qualities`` (phred per consensus position, 0 at '*'
     pads — SeqIO's convention; empty array when the contig has no BQ
     block)."""
-    import glob as _glob
-    import os as _os
 
-    files = (
-        sorted(
-            f
-            for f in _glob.glob(_os.path.join(path, "*"))
-            if _os.path.isfile(f)
-            and not _os.path.basename(f).startswith((".", "_"))
+    def parse(f):
+        ids, seqs, quals = _unzip(
+            _parse_ace(Path(f).read_text(encoding="utf-8")), 3
         )
-        if _os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no ACE files under {path}")
+        return _seq_frame(ids, seqs, quals=quals)
 
-    def _read(batches):
-        import pandas as pd
-
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    recs = _parse_ace(fh.read())
-                yield pd.DataFrame(
-                    {
-                        "ids": [n for n, _, _ in recs],
-                        "names": [n for n, _, _ in recs],
-                        "descriptions": [""] * len(recs),
-                        "sequences": [s for _, s, _ in recs],
-                        "dbxrefs": [[] for _ in recs],
-                        "qualities": [q for _, _, q in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, sequences string, "
-        "dbxrefs array<string>, qualities array<int>",
-    )
+    return read_files(spark, path, "ACE", parse, _SEQ_QUAL_SCHEMA)
 
 
 def _parse_sff(buf: bytes) -> list:
@@ -1554,41 +1324,13 @@ def read_sff(spark: SparkSession, path: str) -> DataFrame:
     records, one container per task (file-parallel, like the alignment
     codecs). Columns mirror read_fastq: ids/names/descriptions/sequences/
     dbxrefs + ``qualities`` as array<int> Phred scores."""
-    import glob as _glob
-    import os as _os
 
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "*.sff")))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no .sff files under {path}")
+    def parse(f):
+        ids, seqs, quals = _unzip(_parse_sff(Path(f).read_bytes()), 3)
+        return _seq_frame(ids, seqs, quals=quals)
 
-    def _read(batches):
-        import pandas as pd
-
-        for b in batches:
-            for f in b["f"]:
-                with open(f, "rb") as fh:
-                    recs = _parse_sff(fh.read())
-                names = [n for n, _, _ in recs]
-                yield pd.DataFrame(
-                    {
-                        "ids": names,
-                        "names": names,
-                        "descriptions": [""] * len(names),
-                        "sequences": [s for _, s, _ in recs],
-                        "dbxrefs": [[] for _ in names],
-                        "qualities": [q for _, _, q in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, sequences string, "
-        "dbxrefs array<string>, qualities array<int>",
+    return read_files(
+        spark, path, ".sff", parse, _SEQ_QUAL_SCHEMA, exts=(".sff",)
     )
 
 
@@ -1695,51 +1437,16 @@ def read_abi(spark: SparkSession, path: str, trim: bool = False) -> DataFrame:
     as array<int>. ``trim=True`` is SeqIO's 'abi-trim': Mott quality
     trimming (:func:`mott_trim`, cutoff 0.05) applied per read in the
     task."""
-    import glob as _glob
-    import os as _os
 
-    files = (
-        sorted(
-            f
-            for pat in ("*.ab1", "*.abi", "*.fsa")
-            for f in _glob.glob(_os.path.join(path, pat))
-        )
-        if _os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise FileNotFoundError(f"no ABIF files under {path}")
+    def parse(f):
+        name, bases, quals = _parse_abif(Path(f).read_bytes(), Path(f).stem)
+        if trim:
+            bases, quals = mott_trim(bases, quals)
+        return _seq_frame([name], [bases], quals=[quals])
 
-    def _read(batches):
-        import os as _os2
-
-        import pandas as pd
-
-        for b in batches:
-            for f in b["f"]:
-                with open(f, "rb") as fh:
-                    name, bases, quals = _parse_abif(
-                        fh.read(),
-                        _os2.path.splitext(_os2.path.basename(f))[0],
-                    )
-                if trim:
-                    bases, quals = mott_trim(bases, quals)
-                yield pd.DataFrame(
-                    {
-                        "ids": [name],
-                        "names": [name],
-                        "descriptions": [""],
-                        "sequences": [bases],
-                        "dbxrefs": [[]],
-                        "qualities": [quals],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, sequences string, "
-        "dbxrefs array<string>, qualities array<int>",
+    return read_files(
+        spark, path, "ABIF", parse, _SEQ_QUAL_SCHEMA,
+        exts=(".ab1", ".abi", ".fsa"),
     )
 
 
@@ -1799,23 +1506,14 @@ def read_ig(spark: SparkSession, path: str) -> DataFrame:
     """IntelliGenetics records (Bio.SeqIO filetype='ig', reference
     BioSeqPipe pipes.py:33): file-parallel parse (one task per file, the
     ACE/alignment shape); descriptions carry the ``;`` comment text."""
-    files = _source_files(path, "IntelliGenetics")
 
-    def _read(batches):
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    recs = _parse_ig(fh.read())
-                pdf = _bioseq_rows([(t, [s]) for t, _, s in recs])
-                pdf["descriptions"] = [d for _, d, _ in recs]
-                yield pdf
+    def parse(f):
+        titles, descs, seqs = _unzip(
+            _parse_ig(Path(f).read_text(encoding="utf-8")), 3
+        )
+        return _seq_frame(titles, seqs, descs=descs)
 
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "IntelliGenetics", parse, _SEQ_SCHEMA)
 
 
 def write_ig(
@@ -1830,78 +1528,45 @@ def write_ig(
     ``part-*.ig`` record stream under ``path``. The topology terminator
     ``1`` is always appended on write and always stripped on read, so a
     sequence legitimately ending in '1'/'2' survives the roundtrip
-    exactly. Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    exactly. Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                descs = (
-                    b[desc_col].astype(str)
-                    if desc_col is not None
-                    else [""] * len(b)
-                )
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str), descs)
-                )
-            if rows:
-                bad = [
-                    n
-                    for n, _, _ in rows
-                    if not n or any(c.isspace() for c in n) or n.startswith(";")
-                ]
-                if bad:
-                    raise ValueError(
-                        "write_ig: record names cannot be empty, contain "
-                        "whitespace, or start with ';' — the title line is "
-                        f"read back verbatim as the id: {bad[:3]}"
-                    )
-                bad_seq = [
-                    n
-                    for n, s, _ in rows
-                    if not s or any(c.isspace() or c == ";" for c in s)
-                ]
-                if bad_seq:
-                    raise ValueError(
-                        "write_ig: sequences cannot be empty or contain "
-                        "whitespace/';' — a ';' sequence line terminates "
-                        f"the record on read: {bad_seq[:3]}"
-                    )
-                bad_desc = [
-                    n for n, _, d in rows if "\n" in d or "\r" in d
-                ]
-                if bad_desc:
-                    raise ValueError(
-                        "write_ig: descriptions cannot contain newlines — "
-                        "a split comment line would be reparsed as a title "
-                        f"line: {bad_desc[:3]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.ig"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    for name, seq, desc in rows:
-                        fh.write(f";{desc}\n{name}\n")
-                        body = seq + "1"  # topology terminator (linear)
-                        for j in range(0, len(body), wrap):
-                            fh.write(body[j : j + wrap] + "\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        cols = [id_col, seq_col] + ([desc_col] if desc_col else [])
-        return [
-            r["n"]
-            for r in df.select(*cols).mapInPandas(_write, "n long").collect()
+    def render(fh, rows, pid):
+        bad = [
+            n
+            for n, _, _ in rows
+            if not n or any(c.isspace() for c in n) or n.startswith(";")
         ]
+        if bad:
+            raise ValueError(
+                "write_ig: record names cannot be empty, contain "
+                "whitespace, or start with ';' — the title line is "
+                f"read back verbatim as the id: {bad[:3]}"
+            )
+        bad_seq = [
+            n
+            for n, s, _ in rows
+            if not s or any(c.isspace() or c == ";" for c in s)
+        ]
+        if bad_seq:
+            raise ValueError(
+                "write_ig: sequences cannot be empty or contain "
+                "whitespace/';' — a ';' sequence line terminates "
+                f"the record on read: {bad_seq[:3]}"
+            )
+        bad_desc = [n for n, _, d in rows if "\n" in d or "\r" in d]
+        if bad_desc:
+            raise ValueError(
+                "write_ig: descriptions cannot contain newlines — "
+                "a split comment line would be reparsed as a title "
+                f"line: {bad_desc[:3]}"
+            )
+        for name, seq, desc in rows:
+            fh.write(f";{desc}\n{name}\n")
+            body = seq + "1"  # topology terminator (linear)
+            for j in range(0, len(body), wrap):
+                fh.write(body[j : j + wrap] + "\n")
 
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "ig", (id_col, seq_col, desc_col), render)
 
 
 # --------------------------------------------------------------------------
@@ -1975,32 +1640,14 @@ def read_phd(spark: SparkSession, path: str) -> DataFrame:
     pipes.py:33): file-parallel parse; per-base PHRED scores surface in
     the ``qualities`` column (SeqIO stores them in
     letter_annotations['phred_quality'])."""
-    files = _source_files(path, "PHD")
 
-    def _read(batches):
-        import pandas as pd
+    def parse(f):
+        ids, seqs, quals = _unzip(
+            _parse_phd(Path(f).read_text(encoding="utf-8")), 3
+        )
+        return _seq_frame(ids, seqs, quals=quals)
 
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    recs = _parse_phd(fh.read())
-                yield pd.DataFrame(
-                    {
-                        "ids": [n for n, _, _ in recs],
-                        "names": [n for n, _, _ in recs],
-                        "descriptions": [""] * len(recs),
-                        "sequences": [s for _, s, _ in recs],
-                        "dbxrefs": [[] for _ in recs],
-                        "qualities": [q for _, _, q in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, sequences string, "
-        "dbxrefs array<string>, qualities array<int>",
-    )
+    return read_files(spark, path, "PHD", parse, _SEQ_QUAL_SCHEMA)
 
 
 def write_phd(
@@ -2013,80 +1660,46 @@ def write_phd(
     """Distributed PHD write: each partition becomes one ``part-*.phd``
     record stream under ``path`` (PHRED layout: BEGIN_SEQUENCE /
     BEGIN_DNA 'base quality position' rows / END_DNA / END_SEQUENCE).
-    Without ``qual_col`` every base gets quality 30. Publication is
-    write-then-swap (:func:`_publish_alignment_dir`)."""
+    Without ``qual_col`` every base gets quality 30. Published like
+    :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                quals = (
-                    list(b[qual_col])
-                    if qual_col is not None
-                    else [None] * len(b)
-                )
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str), quals)
-                )
-            if rows:
-                bad = [
-                    n
-                    for n, _, _ in rows
-                    if not n or any(c.isspace() for c in n)
-                ]
-                if bad:
-                    raise ValueError(
-                        "write_phd: record names cannot be empty or contain "
-                        "whitespace (the BEGIN_SEQUENCE line is "
-                        f"whitespace-tokenized on read): {bad[:3]}"
-                    )
-                bad_seq = [
-                    n
-                    for n, s, _ in rows
-                    if not s or any(c.isspace() for c in s)
-                ]
-                if bad_seq:
-                    raise ValueError(
-                        "write_phd: sequences cannot be empty or contain "
-                        f"whitespace: {bad_seq[:3]}"
-                    )
-                bad_q = [
-                    n
-                    for n, s, q in rows
-                    if q is not None and len(q) != len(s)
-                ]
-                if bad_q:
-                    raise ValueError(
-                        "write_phd: qualities must have one score per "
-                        f"base: {bad_q[:3]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.phd"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    for name, seq, q in rows:
-                        fh.write(f"BEGIN_SEQUENCE {name}\n\nBEGIN_COMMENT\n"
-                                 "\nEND_COMMENT\n\nBEGIN_DNA\n")
-                        for j, c in enumerate(seq):
-                            qq = 30 if q is None else int(q[j])
-                            fh.write(f"{c} {qq} {j + 1}\n")
-                        fh.write("END_DNA\n\nEND_SEQUENCE\n\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        cols = [id_col, seq_col] + ([qual_col] if qual_col else [])
-        return [
-            r["n"]
-            for r in df.select(*cols).mapInPandas(_write, "n long").collect()
+    def render(batches, part):
+        rows = []
+        for b in batches:
+            quals = list(b[qual_col]) if qual_col else [None] * len(b)
+            rows += zip(b[id_col].astype(str), b[seq_col].astype(str), quals)
+        bad = [n for n, _, _ in rows if not n or any(c.isspace() for c in n)]
+        if bad:
+            raise ValueError(
+                "write_phd: record names cannot be empty or contain "
+                "whitespace (the BEGIN_SEQUENCE line is "
+                f"whitespace-tokenized on read): {bad[:3]}"
+            )
+        bad_seq = [
+            n for n, s, _ in rows if not s or any(c.isspace() for c in s)
         ]
+        if bad_seq:
+            raise ValueError(
+                "write_phd: sequences cannot be empty or contain "
+                f"whitespace: {bad_seq[:3]}"
+            )
+        bad_q = [n for n, s, q in rows if q is not None and len(q) != len(s)]
+        if bad_q:
+            raise ValueError(
+                "write_phd: qualities must have one score per "
+                f"base: {bad_q[:3]}"
+            )
+        with part.open(text=True) as fh:
+            for name, seq, q in rows:
+                fh.write(f"BEGIN_SEQUENCE {name}\n\nBEGIN_COMMENT\n"
+                         "\nEND_COMMENT\n\nBEGIN_DNA\n")
+                for j, c in enumerate(seq):
+                    qq = 30 if q is None else int(q[j])
+                    fh.write(f"{c} {qq} {j + 1}\n")
+                fh.write("END_DNA\n\nEND_SEQUENCE\n\n")
 
-    _publish_alignment_dir(job, path)
+    cols = [id_col, seq_col] + ([qual_col] if qual_col else [])
+    write_parts(df.select(*cols), path, "phd", render)
 
 
 # --------------------------------------------------------------------------
@@ -2218,34 +1831,16 @@ def _read_pdb(spark: SparkSession, path: str, parse) -> DataFrame:
     """Shared file-parallel read for the two PDB sequence views: one row
     per chain, ids '<IDCODE>:<chain>' (the Bio.SeqIO pdb-seqres id
     scheme), descriptions 'mol:protein length:<n>'."""
-    files = _source_files(path, "PDB")
 
-    def _read(batches):
-        import pandas as pd
+    def _parse(f):
+        idcode, chains = parse(Path(f).read_text(encoding="utf-8"))
+        return _seq_frame(
+            [f"{idcode}:{c}" for c, _ in chains],
+            [s for _, s in chains],
+            descs=[f"mol:protein length:{len(s)}" for _, s in chains],
+        )
 
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    idcode, chains = parse(fh.read())
-                ids = [f"{idcode}:{c}" for c, _ in chains]
-                yield pd.DataFrame(
-                    {
-                        "ids": ids,
-                        "names": ids,
-                        "descriptions": [
-                            f"mol:protein length:{len(s)}" for _, s in chains
-                        ],
-                        "sequences": [s for _, s in chains],
-                        "dbxrefs": [[] for _ in chains],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "PDB", _parse, _SEQ_SCHEMA)
 
 
 def read_pdb_seqres(spark: SparkSession, path: str) -> DataFrame:
@@ -2529,118 +2124,44 @@ def write_cif_seqres(
     record 4-column idCode ceiling — the whole table fits in
     per-partition files). Each row is one entity+chain: the row id is
     the chain id (must be non-empty, whitespace/quote-free), sequences
-    one-letter amino-acid codes. Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    one-letter amino-acid codes. Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str))
+    def render(fh, rows, pid):
+        for name, seq in rows:
+            low = name.lower()
+            if (
+                not name
+                or any(c.isspace() or c in "'\"#;$[]" for c in name)
+                or name.startswith("_")
+                or name in (".", "?")
+                or low in ("loop_", "stop_", "global_")
+                or low.startswith("data_")
+            ):
+                raise ValueError(
+                    "write_cif_seqres: chain ids are written as "
+                    "unquoted CIF values — they must be non-empty, "
+                    "free of whitespace/quotes/CIF specials, not "
+                    "start with '_', and not be a CIF keyword or "
+                    f"null symbol: {name!r}"
                 )
-            if rows:
-                for name, seq in rows:
-                    low = name.lower()
-                    if (
-                        not name
-                        or any(
-                            c.isspace() or c in "'\"#;$[]" for c in name
-                        )
-                        or name.startswith("_")
-                        or name in (".", "?")
-                        or low in ("loop_", "stop_", "global_")
-                        or low.startswith("data_")
-                    ):
-                        raise ValueError(
-                            "write_cif_seqres: chain ids are written as "
-                            "unquoted CIF values — they must be non-empty, "
-                            "free of whitespace/quotes/CIF specials, not "
-                            "start with '_', and not be a CIF keyword or "
-                            f"null symbol: {name!r}"
-                        )
-                    bad = [c for c in seq if c not in _AA_1TO3]
-                    if not seq or bad:
-                        raise ValueError(
-                            "write_cif_seqres: sequences must be non-empty "
-                            "one-letter amino-acid codes; "
-                            f"{name!r} has {bad[:5]!r}"
-                        )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.cif"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write(f"data_{entry_prefix}{pid:05d}\n")
-                    fh.write(f"_entry.id {entry_prefix}{pid:05d}\n")
-                    fh.write("loop_\n_entity_poly_seq.entity_id\n"
-                             "_entity_poly_seq.num\n"
-                             "_entity_poly_seq.mon_id\n")
-                    for ent, (_, seq) in enumerate(rows, 1):
-                        for num, c in enumerate(seq, 1):
-                            fh.write(f"{ent} {num} {_AA_1TO3[c]}\n")
-                    fh.write("loop_\n_struct_asym.id\n"
-                             "_struct_asym.entity_id\n")
-                    for ent, (name, _) in enumerate(rows, 1):
-                        fh.write(f"{name} {ent}\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
+            bad = [c for c in seq if c not in _AA_1TO3]
+            if not seq or bad:
+                raise ValueError(
+                    "write_cif_seqres: sequences must be non-empty "
+                    f"one-letter amino-acid codes; {name!r} has {bad[:5]!r}"
+                )
+        fh.write(f"data_{entry_prefix}{pid:05d}\n")
+        fh.write(f"_entry.id {entry_prefix}{pid:05d}\n")
+        fh.write("loop_\n_entity_poly_seq.entity_id\n"
+                 "_entity_poly_seq.num\n_entity_poly_seq.mon_id\n")
+        for ent, (_, seq) in enumerate(rows, 1):
+            for num, c in enumerate(seq, 1):
+                fh.write(f"{ent} {num} {_AA_1TO3[c]}\n")
+        fh.write("loop_\n_struct_asym.id\n_struct_asym.entity_id\n")
+        for ent, (name, _) in enumerate(rows, 1):
+            fh.write(f"{name} {ent}\n")
 
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_alignment_dir(job, path)
-
-
-def _publish_record_dir(job, path: str) -> None:
-    """Write-then-swap publication for one-file-per-RECORD writers
-    (write_pdb_seqres, write_nib) — same protocol as
-    :func:`_publish_alignment_dir`, but parts are named by record id, so
-    retried/speculative attempts are idempotent overwrites of the same
-    target name and the invariant is files == written rows. A mismatch
-    means duplicate record ids (two rows fought over one filename) or a
-    non-shared filesystem — both are loud."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    for stale in glob.glob(f"{path}.tmp-*") + glob.glob(f"{path}.old-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp)
-    try:
-        total = sum(job(tmp))
-        files = [
-            f
-            for f in os.listdir(tmp)
-            if not f.startswith((".", "_"))
-        ]
-        if len(files) != total:
-            raise RuntimeError(
-                f"record write: tasks reported {total} records but "
-                f"{len(files)} files landed in {tmp} — duplicate record "
-                "ids collapse onto one filename, or driver and executors "
-                "do not share this filesystem (see edge_formats."
-                "write_sparse's filesystem contract)"
-            )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _write_rows(df, path, "cif", (id_col, seq_col), render)
 
 
 def write_pdb_seqres(
@@ -2654,83 +2175,43 @@ def write_pdb_seqres(
     (a PDB entry is one structure — many records per file is not
     representable, unlike the alignment formats). Ids must be 1-4
     alphanumeric characters (the HEADER idCode field is 4 columns) and
-    unique; sequences must use the one-letter amino-acid alphabet.
-    Publication is write-then-swap (:func:`_publish_record_dir`)."""
+    unique — duplicates fail the write; sequences must use the
+    one-letter amino-acid alphabet. A rerun replaces the previous
+    output; a failed job leaves it intact
+    (:func:`fireworks_spark.connector.write_parts`)."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
+    def render(batches, part):
+        for name, seq in _rows(batches, id_col, seq_col):
+            if not (1 <= len(name) <= 4 and name.isalnum() and name.isascii()):
+                raise ValueError(
+                    "write_pdb_seqres: ids must be 1-4 ASCII "
+                    "alphanumeric characters (the HEADER idCode "
+                    f"field is 4 fixed columns): {name!r}"
+                )
+            bad = [c for c in seq if c not in _AA_1TO3]
+            if not seq or bad:
+                raise ValueError(
+                    "write_pdb_seqres: sequences must be non-empty "
+                    f"one-letter amino-acid codes; {name!r} has {bad[:5]!r}"
+                )
+            if len(seq) > 9999:
+                # the fixed-column template holds numRes in 4 columns and
+                # serNum in 3; a longer sequence would silently shift the
+                # columns and write a file the reader rejects
+                raise ValueError(
+                    "write_pdb_seqres: SEQRES numRes is a 4-column "
+                    f"field; {name!r} has {len(seq)} residues (max 9999)"
+                )
+            lines = [f"HEADER    {'SYNTHETIC':<40}{'':9}   {name.upper():<4}"]
+            res3 = [_AA_1TO3[c] for c in seq]
+            for ser, j in enumerate(range(0, len(res3), 13), 1):
+                row = " ".join(res3[j : j + 13])
+                lines.append(f"SEQRES {ser:>3} A {len(res3):>4}  {row}")
+            lines.append("END")
+            with part.open(f"{name.lower()}.ent", text=True) as fh:
+                fh.write("\n".join(lines) + "\n")
 
-            import pandas as pd
-
-            n = 0
-            for b in batches:
-                for name, seq in zip(
-                    b[id_col].astype(str), b[seq_col].astype(str)
-                ):
-                    if not (
-                        1 <= len(name) <= 4
-                        and name.isalnum()
-                        and name.isascii()
-                    ):
-                        raise ValueError(
-                            "write_pdb_seqres: ids must be 1-4 ASCII "
-                            "alphanumeric characters (the HEADER idCode "
-                            f"field is 4 fixed columns): {name!r}"
-                        )
-                    bad = [c for c in seq if c not in _AA_1TO3]
-                    if not seq or bad:
-                        raise ValueError(
-                            "write_pdb_seqres: sequences must be non-empty "
-                            "one-letter amino-acid codes; "
-                            f"{name!r} has {bad[:5]!r}"
-                        )
-                    if len(seq) > 9999:
-                        # the fixed-column template holds numRes in 4
-                        # columns and serNum in 3; a longer sequence would
-                        # silently shift the columns and write a file the
-                        # reader rejects
-                        raise ValueError(
-                            "write_pdb_seqres: SEQRES numRes is a 4-column "
-                            f"field; {name!r} has {len(seq)} residues "
-                            "(max 9999)"
-                        )
-                    up = name.upper()
-                    lines = [
-                        f"HEADER    {'SYNTHETIC':<40}{'':9}   {up:<4}"
-                    ]
-                    res3 = [_AA_1TO3[c] for c in seq]
-                    for ser, j in enumerate(range(0, len(res3), 13), 1):
-                        row = " ".join(res3[j : j + 13])
-                        lines.append(
-                            f"SEQRES {ser:>3} A {len(res3):>4}  {row}"
-                        )
-                    lines.append("END")
-                    # per-ATTEMPT scratch name: a zombie/retried attempt
-                    # writing the same record must not interleave into
-                    # one open scratch file — each attempt writes its own
-                    # and the atomic rename makes the last COMPLETE
-                    # attempt win (identical content either way)
-                    scratch = _os.path.join(
-                        tmp, f".{name.lower()}.{uuid.uuid4().hex}.ent"
-                    )
-                    with open(scratch, "w", encoding="utf-8") as fh:
-                        fh.write("\n".join(lines) + "\n")
-                    _os.rename(
-                        scratch, _os.path.join(tmp, f"{name.lower()}.ent")
-                    )
-                    n += 1
-            yield pd.DataFrame({"n": [n]})
-
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_record_dir(job, path)
+    write_parts(df.select(id_col, seq_col), path, "ent", render)
 
 
 _NIB_MAGIC = 0x6BE93D3A
@@ -2789,34 +2270,12 @@ def read_nib(spark: SparkSession, path: str) -> DataFrame:
     0=T 1=C 2=A 3=G 4=N, bit 0x8 = soft-masked/lowercase). The format
     carries no name; ids come from the file stem. File-parallel,
     deterministic byte math in the task."""
-    import os as _os
 
-    files = _source_files(path, "nib")
+    def parse(f):
+        seq = _parse_nib(Path(f).read_bytes(), f)
+        return _seq_frame([Path(f).stem], [seq])
 
-    def _read(batches):
-        import pandas as pd
-
-        for b in batches:
-            for f in b["f"]:
-                with open(f, "rb") as fh:
-                    seq = _parse_nib(fh.read(), f)
-                stem = _os.path.splitext(_os.path.basename(f))[0]
-                yield pd.DataFrame(
-                    {
-                        "ids": [stem],
-                        "names": [stem],
-                        "descriptions": [""],
-                        "sequences": [seq],
-                        "dbxrefs": [[]],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "nib", parse, _SEQ_SCHEMA)
 
 
 def write_nib(
@@ -2828,72 +2287,45 @@ def write_nib(
     """Distributed .nib write: each ROW becomes one ``<id>.nib`` file
     under ``path`` (the format holds exactly one unnamed sequence per
     file; the id becomes the file stem, so it must be a safe unique
-    filename). Alphabet: TCAGN upper (plain) / lower (soft-masked).
-    Little-endian header, the byte order UCSC tools write on x86.
-    Publication is write-then-swap (:func:`_publish_record_dir`)."""
+    filename — duplicates fail the write). Alphabet: TCAGN upper
+    (plain) / lower (soft-masked). Little-endian header, the byte order
+    UCSC tools write on x86. Published like :func:`write_pdb_seqres`."""
     import re as _re
 
     name_ok = _re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*\Z")
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import struct
-            import uuid
+    def render(batches, part):
+        import struct
 
-            import pandas as pd
-
-            n_rows = 0
-            for b in batches:
-                for name, seq in zip(
-                    b[id_col].astype(str), b[seq_col].astype(str)
-                ):
-                    if not name_ok.fullmatch(name):
-                        raise ValueError(
-                            "write_nib: ids become file stems and must "
-                            "match [A-Za-z0-9][A-Za-z0-9._-]* (readers "
-                            "skip dot/underscore-prefixed files): "
-                            f"{name!r}"
-                        )
-                    codes = []
-                    for c in seq:
-                        base = _NIB_ENCODE.get(c.upper())
-                        if base is None:
-                            raise ValueError(
-                                "write_nib: nib holds only TCAGN/tcagn "
-                                f"bases; {name!r} has {c!r}"
-                            )
-                        codes.append(base | (0x8 if c.islower() else 0))
-                    if not codes:
-                        raise ValueError(
-                            f"write_nib: empty sequence for {name!r}"
-                        )
-                    if len(codes) % 2:
-                        codes.append(0)  # pad nibble, ignored on read
-                    body = bytes(
-                        (codes[j] << 4) | codes[j + 1]
-                        for j in range(0, len(codes), 2)
+        for name, seq in _rows(batches, id_col, seq_col):
+            if not name_ok.fullmatch(name):
+                raise ValueError(
+                    "write_nib: ids become file stems and must "
+                    "match [A-Za-z0-9][A-Za-z0-9._-]* (readers "
+                    f"skip dot/underscore-prefixed files): {name!r}"
+                )
+            codes = []
+            for c in seq:
+                base = _NIB_ENCODE.get(c.upper())
+                if base is None:
+                    raise ValueError(
+                        "write_nib: nib holds only TCAGN/tcagn "
+                        f"bases; {name!r} has {c!r}"
                     )
-                    # per-ATTEMPT scratch (see write_pdb_seqres): zombie
-                    # attempts must not interleave into one open file
-                    scratch = _os.path.join(
-                        tmp, f".{name}.{uuid.uuid4().hex}.nib"
-                    )
-                    with open(scratch, "wb") as fh:
-                        fh.write(struct.pack("<II", _NIB_MAGIC, len(seq)))
-                        fh.write(body)
-                    _os.rename(scratch, _os.path.join(tmp, f"{name}.nib"))
-                    n_rows += 1
-            yield pd.DataFrame({"n": [n_rows]})
+                codes.append(base | (0x8 if c.islower() else 0))
+            if not codes:
+                raise ValueError(f"write_nib: empty sequence for {name!r}")
+            if len(codes) % 2:
+                codes.append(0)  # pad nibble, ignored on read
+            body = bytes(
+                (codes[j] << 4) | codes[j + 1]
+                for j in range(0, len(codes), 2)
+            )
+            with part.open(f"{name}.nib") as fh:
+                fh.write(struct.pack("<II", _NIB_MAGIC, len(seq)))
+                fh.write(body)
 
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_record_dir(job, path)
+    write_parts(df.select(id_col, seq_col), path, "nib", render)
 
 
 # --------------------------------------------------------------------------
@@ -2952,31 +2384,14 @@ def read_seqxml(spark: SparkSession, path: str) -> DataFrame:
     """SeqXML records (Bio.SeqIO filetype='seqxml', reference BioSeqPipe
     pipes.py:33): file-parallel parse; DBRef cross-references surface in
     the dbxrefs column (the one source format here that populates it)."""
-    files = _source_files(path, "SeqXML")
 
-    def _read(batches):
-        import pandas as pd
+    def parse(f):
+        ids, descs, seqs, refs = _unzip(
+            _parse_seqxml(Path(f).read_text(encoding="utf-8")), 4
+        )
+        return _seq_frame(ids, seqs, descs=descs, dbxrefs=refs)
 
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    recs = _parse_seqxml(fh.read())
-                yield pd.DataFrame(
-                    {
-                        "ids": [i for i, _, _, _ in recs],
-                        "names": [i for i, _, _, _ in recs],
-                        "descriptions": [d for _, d, _, _ in recs],
-                        "sequences": [s for _, _, s, _ in recs],
-                        "dbxrefs": [r for _, _, _, r in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "SeqXML", parse, _SEQ_SCHEMA)
 
 
 def write_seqxml(
@@ -2991,79 +2406,40 @@ def write_seqxml(
     ``part-*.xml`` document under ``path``. Ids and descriptions are
     XML-escaped (so any text roundtrips); sequences must be non-empty
     and whitespace-free (the reader strips whitespace, so it would not
-    roundtrip). Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    roundtrip). Published like :func:`write_phylip`."""
     if seq_tag not in ("DNAseq", "RNAseq", "AAseq"):
         raise ValueError(
             f"write_seqxml: seq_tag must be DNAseq/RNAseq/AAseq, got "
             f"{seq_tag!r}"
         )
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-            from xml.sax.saxutils import escape, quoteattr
+    def render(fh, rows, pid):
+        from xml.sax.saxutils import escape, quoteattr
 
-            import pandas as pd
-            from pyspark import TaskContext
+        bad = [n for n, s, _ in rows if not s or any(c.isspace() for c in s)]
+        if bad:
+            raise ValueError(
+                "write_seqxml: sequences cannot be empty or contain "
+                "whitespace (the reader joins split sequence text): "
+                f"{bad[:3]}"
+            )
+        if any(not n for n, _, _ in rows):
+            raise ValueError(
+                "write_seqxml: ids cannot be empty — read_seqxml "
+                "rejects an <entry> without an id, so the written "
+                "part file would be unreadable"
+            )
+        fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
+        fh.write('<seqXML seqXMLversion="0.4">\n')
+        for name, seq, desc in rows:
+            fh.write(f"  <entry id={quoteattr(name)}>\n")
+            if desc:
+                fh.write(f"    <description>{escape(desc)}</description>\n")
+            fh.write(f"    <{seq_tag}>{escape(seq)}</{seq_tag}>\n")
+            fh.write("  </entry>\n")
+        fh.write("</seqXML>\n")
 
-            rows = []
-            for b in batches:
-                descs = (
-                    b[desc_col].astype(str)
-                    if desc_col is not None
-                    else [""] * len(b)
-                )
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str), descs)
-                )
-            if rows:
-                bad = [
-                    n
-                    for n, s, _ in rows
-                    if not s or any(c.isspace() for c in s)
-                ]
-                if bad:
-                    raise ValueError(
-                        "write_seqxml: sequences cannot be empty or contain "
-                        "whitespace (the reader joins split sequence text): "
-                        f"{bad[:3]}"
-                    )
-                if any(not n for n, _, _ in rows):
-                    raise ValueError(
-                        "write_seqxml: ids cannot be empty — read_seqxml "
-                        "rejects an <entry> without an id, so the written "
-                        "part file would be unreadable"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.xml"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-                    fh.write('<seqXML seqXMLversion="0.4">\n')
-                    for name, seq, desc in rows:
-                        fh.write(f"  <entry id={quoteattr(name)}>\n")
-                        if desc:
-                            fh.write(
-                                f"    <description>{escape(desc)}"
-                                "</description>\n"
-                            )
-                        fh.write(
-                            f"    <{seq_tag}>{escape(seq)}</{seq_tag}>\n"
-                        )
-                        fh.write("  </entry>\n")
-                    fh.write("</seqXML>\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        cols = [id_col, seq_col] + ([desc_col] if desc_col else [])
-        return [
-            r["n"]
-            for r in df.select(*cols).mapInPandas(_write, "n long").collect()
-        ]
-
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "xml", (id_col, seq_col, desc_col), render)
 
 
 def _localname(tag) -> str:
@@ -3146,31 +2522,14 @@ def read_uniprot_xml(spark: SparkSession, path: str) -> DataFrame:
     columns the reference Message carries (annotations beyond them —
     features, comments, evidence — are metadata outside the Message
     schema)."""
-    files = _source_files(path, "UniProt XML")
 
-    def _read(batches):
-        import pandas as pd
+    def parse(f):
+        accs, names, descs, seqs, refs = _unzip(
+            _parse_uniprot_xml(Path(f).read_text(encoding="utf-8")), 5
+        )
+        return _seq_frame(accs, seqs, descs=descs, names=names, dbxrefs=refs)
 
-        for b in batches:
-            for f in b["f"]:
-                with open(f, encoding="utf-8") as fh:
-                    recs = _parse_uniprot_xml(fh.read())
-                yield pd.DataFrame(
-                    {
-                        "ids": [a for a, _, _, _, _ in recs],
-                        "names": [n for _, n, _, _, _ in recs],
-                        "descriptions": [d for _, _, d, _, _ in recs],
-                        "sequences": [s for _, _, _, s, _ in recs],
-                        "dbxrefs": [r for _, _, _, _, r in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "UniProt XML", parse, _SEQ_SCHEMA)
 
 
 def write_uniprot_xml(
@@ -3187,90 +2546,45 @@ def write_uniprot_xml(
     this subset, which roundtrips through read_uniprot_xml exactly, is
     the useful interchange form). One namespaced document per partition;
     ids/names/descriptions are XML-escaped; sequences must be non-empty
-    and whitespace-free. Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    and whitespace-free. Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import uuid
-            from xml.sax.saxutils import escape
+    def render(fh, rows, pid):
+        from xml.sax.saxutils import escape
 
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                names = (
-                    b[name_col].astype(str)
-                    if name_col is not None
-                    else b[id_col].astype(str)
-                )
-                descs = (
-                    b[desc_col].astype(str)
-                    if desc_col is not None
-                    else [""] * len(b)
-                )
-                rows += list(
-                    zip(
-                        b[id_col].astype(str),
-                        names,
-                        b[seq_col].astype(str),
-                        descs,
-                    )
-                )
-            if rows:
-                bad = [
-                    a
-                    for a, _, s, _ in rows
-                    if not a or not s or any(c.isspace() for c in s)
-                ]
-                if bad:
-                    raise ValueError(
-                        "write_uniprot_xml: accessions cannot be empty and "
-                        "sequences cannot be empty or contain whitespace "
-                        f"(the reader strips/rejects them): {bad[:3]}"
-                    )
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.xml"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "w", encoding="utf-8") as fh:
-                    fh.write(
-                        '<?xml version="1.0" encoding="UTF-8"?>\n'
-                        '<uniprot xmlns="http://uniprot.org/uniprot">\n'
-                    )
-                    for acc, nm, seq, desc in rows:
-                        fh.write("  <entry>\n")
-                        fh.write(
-                            f"    <accession>{escape(acc)}</accession>\n"
-                        )
-                        fh.write(f"    <name>{escape(nm)}</name>\n")
-                        if desc:
-                            fh.write(
-                                "    <protein><recommendedName><fullName>"
-                                f"{escape(desc)}"
-                                "</fullName></recommendedName></protein>\n"
-                            )
-                        fh.write(
-                            f'    <sequence length="{len(seq)}">'
-                            f"{escape(seq)}</sequence>\n"
-                        )
-                        fh.write("  </entry>\n")
-                    fh.write("</uniprot>\n")
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
-
-        cols = [id_col, seq_col]
-        if name_col:
-            cols.append(name_col)
-        if desc_col:
-            cols.append(desc_col)
-        return [
-            r["n"]
-            for r in df.select(*cols).mapInPandas(_write, "n long").collect()
+        bad = [
+            a
+            for a, _, s, _ in rows
+            if not a or not s or any(c.isspace() for c in s)
         ]
+        if bad:
+            raise ValueError(
+                "write_uniprot_xml: accessions cannot be empty and "
+                "sequences cannot be empty or contain whitespace "
+                f"(the reader strips/rejects them): {bad[:3]}"
+            )
+        fh.write(
+            '<?xml version="1.0" encoding="UTF-8"?>\n'
+            '<uniprot xmlns="http://uniprot.org/uniprot">\n'
+        )
+        for acc, nm, seq, desc in rows:
+            fh.write("  <entry>\n")
+            fh.write(f"    <accession>{escape(acc)}</accession>\n")
+            fh.write(f"    <name>{escape(nm)}</name>\n")
+            if desc:
+                fh.write(
+                    "    <protein><recommendedName><fullName>"
+                    f"{escape(desc)}"
+                    "</fullName></recommendedName></protein>\n"
+                )
+            fh.write(
+                f'    <sequence length="{len(seq)}">'
+                f"{escape(seq)}</sequence>\n"
+            )
+            fh.write("  </entry>\n")
+        fh.write("</uniprot>\n")
 
-    _publish_alignment_dir(job, path)
+    cols = (id_col, name_col or id_col, seq_col, desc_col)
+    _write_rows(df, path, "xml", cols, render)
 
 
 _TWOBIT_MAGIC = 0x1A412743
@@ -3392,31 +2706,12 @@ def read_twobit(spark: SparkSession, path: str) -> DataFrame:
     at 4 bases/byte (first base in the high bits, T=0 C=1 A=2 G=3).
     N blocks overlay 'N', mask blocks render lowercase (the genomics
     soft-mask convention). File-parallel; pure byte math in the task."""
-    files = _source_files(path, "twobit")
 
-    def _read(batches):
-        import pandas as pd
+    def parse(f):
+        names, seqs = _unzip(_parse_twobit(Path(f).read_bytes(), f), 2)
+        return _seq_frame(names, seqs)
 
-        for b in batches:
-            for f in b["f"]:
-                with open(f, "rb") as fh:
-                    recs = _parse_twobit(fh.read(), f)
-                yield pd.DataFrame(
-                    {
-                        "ids": [n for n, _ in recs],
-                        "names": [n for n, _ in recs],
-                        "descriptions": [""] * len(recs),
-                        "sequences": [s for _, s in recs],
-                        "dbxrefs": [[] for _ in recs],
-                    }
-                )
-
-    paths = spark.createDataFrame([(f,) for f in files], "f string")
-    return paths.repartition(len(files)).mapInPandas(
-        _read,
-        "ids string, names string, descriptions string, "
-        "sequences string, dbxrefs array<string>",
-    )
+    return read_files(spark, path, "twobit", parse, _SEQ_SCHEMA)
 
 
 def write_twobit(
@@ -3431,98 +2726,61 @@ def write_twobit(
     the block, the UCSC convention), lowercase runs become mask blocks.
     Little-endian. The format's offsets are uint32, so one part file is
     capped at 4 GiB — repartition up if a partition's sequences exceed
-    that (the writer fails loudly). Publication is write-then-swap
-    (:func:`_publish_alignment_dir`)."""
+    that (the writer fails loudly). Published like :func:`write_phylip`."""
 
-    def job(tmp):
-        def _write(batches):
-            import os as _os
-            import struct
-            import uuid
+    def render(fh, rows, pid):
+        import struct
 
-            import pandas as pd
-            from pyspark import TaskContext
-
-            rows = []
-            for b in batches:
-                rows += list(
-                    zip(b[id_col].astype(str), b[seq_col].astype(str))
+        recs = []
+        for name, seq in rows:
+            nb = name.encode("ascii", "strict") if name else b""
+            if not 1 <= len(nb) <= 255:
+                raise ValueError(
+                    f"write_twobit: names must be 1-255 ASCII bytes: {name!r}"
                 )
-            if rows:
-                recs = []
-                for name, seq in rows:
-                    nb = name.encode("ascii", "strict") if name else b""
-                    if not 1 <= len(nb) <= 255:
-                        raise ValueError(
-                            "write_twobit: names must be 1-255 ASCII "
-                            f"bytes: {name!r}"
-                        )
-                    if not seq:
-                        raise ValueError(
-                            f"write_twobit: empty sequence for {name!r}"
-                        )
-                    up = seq.upper()
-                    bad = set(up) - set("ACGTN")
-                    if bad:
-                        raise ValueError(
-                            "write_twobit: 2bit holds only ACGTN/acgtn "
-                            f"bases; {name!r} has {sorted(bad)[:5]!r}"
-                        )
-                    nruns = _runs([c == "N" for c in up])
-                    mruns = _runs([c.islower() for c in seq])
-                    codes = [
-                        _TWOBIT_ENCODE.get(c, 0) for c in up
-                    ]  # N packs as T(0) under its N block
-                    packed = bytearray()
-                    for j in range(0, len(codes), 4):
-                        quad = codes[j : j + 4] + [0] * (4 - len(codes[j:j + 4]))
-                        packed.append(
-                            (quad[0] << 6) | (quad[1] << 4)
-                            | (quad[2] << 2) | quad[3]
-                        )
-                    body = struct.pack("<I", len(seq))
-                    for runs in (nruns, mruns):
-                        body += struct.pack("<I", len(runs))
-                        body += struct.pack(
-                            f"<{len(runs)}I", *[s for s, _ in runs]
-                        )
-                        body += struct.pack(
-                            f"<{len(runs)}I", *[z for _, z in runs]
-                        )
-                    body += struct.pack("<I", 0) + bytes(packed)
-                    recs.append((nb, body))
-                index_size = sum(5 + len(nb) for nb, _ in recs)
-                off = 16 + index_size
-                header = struct.pack("<IIII", _TWOBIT_MAGIC, 0, len(recs), 0)
-                index = bytearray()
-                for nb, body in recs:
-                    if off > 0xFFFFFFFF:
-                        raise ValueError(
-                            "write_twobit: part file exceeds the format's "
-                            "4 GiB uint32 offset limit — repartition the "
-                            "DataFrame into more (smaller) partitions"
-                        )
-                    index += bytes([len(nb)]) + nb + struct.pack("<I", off)
-                    off += len(body)
-                pid = TaskContext.get().partitionId()
-                base = f"part-{pid:05d}-{uuid.uuid4().hex}.2bit"
-                scratch = _os.path.join(tmp, "." + base)
-                with open(scratch, "wb") as fh:
-                    fh.write(header)
-                    fh.write(index)
-                    for _, body in recs:
-                        fh.write(body)
-                _os.rename(scratch, _os.path.join(tmp, base))
-            yield pd.DataFrame({"n": [len(rows)]})
+            if not seq:
+                raise ValueError(f"write_twobit: empty sequence for {name!r}")
+            up = seq.upper()
+            bad = set(up) - set("ACGTN")
+            if bad:
+                raise ValueError(
+                    "write_twobit: 2bit holds only ACGTN/acgtn "
+                    f"bases; {name!r} has {sorted(bad)[:5]!r}"
+                )
+            nruns = _runs([c == "N" for c in up])
+            mruns = _runs([c.islower() for c in seq])
+            # N packs as T(0) under its N block
+            codes = [_TWOBIT_ENCODE.get(c, 0) for c in up]
+            codes += [0] * (-len(codes) % 4)
+            packed = bytes(
+                (codes[j] << 6) | (codes[j + 1] << 4)
+                | (codes[j + 2] << 2) | codes[j + 3]
+                for j in range(0, len(codes), 4)
+            )
+            body = struct.pack("<I", len(seq))
+            for runs in (nruns, mruns):
+                body += struct.pack("<I", len(runs))
+                body += struct.pack(f"<{len(runs)}I", *[s for s, _ in runs])
+                body += struct.pack(f"<{len(runs)}I", *[z for _, z in runs])
+            body += struct.pack("<I", 0) + packed
+            recs.append((nb, body))
+        off = 16 + sum(5 + len(nb) for nb, _ in recs)
+        index = bytearray()
+        for nb, body in recs:
+            if off > 0xFFFFFFFF:
+                raise ValueError(
+                    "write_twobit: part file exceeds the format's "
+                    "4 GiB uint32 offset limit — repartition the "
+                    "DataFrame into more (smaller) partitions"
+                )
+            index += bytes([len(nb)]) + nb + struct.pack("<I", off)
+            off += len(body)
+        fh.write(struct.pack("<IIII", _TWOBIT_MAGIC, 0, len(recs), 0))
+        fh.write(index)
+        for _, body in recs:
+            fh.write(body)
 
-        return [
-            r["n"]
-            for r in df.select(id_col, seq_col)
-            .mapInPandas(_write, "n long")
-            .collect()
-        ]
-
-    _publish_alignment_dir(job, path)
+    _write_rows(df, path, "2bit", (id_col, seq_col), render, text=False)
 
 
 def read_bioseq(

@@ -793,8 +793,8 @@ def maintain_rollup_table(
     """
     import os
     import shutil
-    import uuid
 
+    from fireworks_spark import publish
     from fireworks_spark.database import upsert_rows
 
     if commit_protocol not in ("rename", "manifest"):
@@ -841,8 +841,6 @@ def maintain_rollup_table(
         if commit_protocol == "manifest":
             import glob as _glob
 
-            from fireworks_spark import publish
-
             gen, data_dir = publish.new_generation(table_path)
             try:
                 merged.write.mode("overwrite").parquet(data_dir)
@@ -857,13 +855,9 @@ def maintain_rollup_table(
                 keep=keep_generations,
             )
             return
-        tmp = f"{table_path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{table_path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(table_path):
-            os.rename(table_path, old)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old, ignore_errors=True)
+        publish.swap_dir(
+            table_path, lambda tmp: merged.write.mode("overwrite").parquet(tmp)
+        )
 
     ck = scratch_dir("fw_ck_")
     try:

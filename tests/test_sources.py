@@ -1,16 +1,34 @@
-"""FASTA source vs a plain-Python parse of the reference fixture
-(/root/reference/test/sample_genes.fa, 759 records — reference
-pipes_test.py:60-81 parity)."""
+"""FASTA source vs a plain-Python parse of a seeded multi-record file
+(reference pipes_test.py:60-81 parity: wrapped sequence lines,
+multi-word headers)."""
 
 from __future__ import annotations
 
 import os
+import random
 
 import pytest
 
 from fireworks_spark.sources import read_fasta
 
-FIXTURE = "/root/reference/test/sample_genes.fa"
+N_RECORDS = 240
+
+
+def _write_fasta(path, seed=7):
+    """A seeded FASTA file: multi-word headers, sequences of 1-400 bases
+    wrapped at 60 or 70 columns (a last line of any length)."""
+    rng = random.Random(seed)
+    words = ["putative", "kinase", "domain", "protein", "[Homo sapiens]"]
+    with open(path, "w") as f:
+        for i in range(N_RECORDS):
+            extra = rng.sample(words, rng.randint(0, 4))
+            header = " ".join([f"gene{i:04d}", *extra])
+            n = rng.randint(1, 400)
+            seq = "".join(rng.choice("ACGTN") for _ in range(n))
+            width = rng.choice([60, 70])
+            f.write(f">{header}\n")
+            for j in range(0, n, width):
+                f.write(seq[j : j + width] + "\n")
 
 
 def _python_parse(path):
@@ -30,25 +48,16 @@ def _python_parse(path):
     return recs
 
 
-def test_fasta_matches_python_parse(spark):
-    # runtime check with a short retry, NOT an import-time skipif: the
-    # read-only reference mount has shown transient exists()=False blips
-    # during long full-suite runs, silently skipping this test
-    import time
-
-    for _ in range(3):
-        if os.path.exists(FIXTURE):
-            break
-        time.sleep(1.0)
-    else:
-        pytest.skip("reference fixture unavailable after retries")
-    want = _python_parse(FIXTURE)
+def test_fasta_matches_python_parse(spark, tmp_path):
+    path = str(tmp_path / "genes.fa")
+    _write_fasta(path)
+    want = _python_parse(path)
     got = (
-        read_fasta(spark, FIXTURE)
+        read_fasta(spark, path)
         .select("ids", "names", "descriptions", "sequences", "dbxrefs")
         .collect()
     )
-    assert len(got) == len(want) == 759
+    assert len(got) == len(want) == N_RECORDS
     by_desc = {r.descriptions: r for r in got}
     for header, seq in (want[0], want[-1], want[100]):
         r = by_desc[header.strip()]
@@ -809,7 +818,7 @@ def test_clustal_gapped_seqnos_stripped(spark, tmp_path):
 
 def test_alignment_read_dedups_zombie_part_attempts(spark, tmp_path):
     """ADVICE r10 (medium): a zombie/speculative task attempt that renames
-    its part file visible AFTER _publish_alignment_dir's write-side scan
+    its part file visible AFTER the writer's publish check
     leaves two part-<pid>-* files for one partition. The read side keeps
     only the lexicographically-first file per pid (any completed attempt
     holds the identical alignment), so no taxon is read twice; files
