@@ -402,16 +402,12 @@ def main() -> None:
             timings[name] = None
         print(f"[bench] {name}: {timings[name]}s", file=sys.stderr)
         # Release this query's persisted intermediates (dedup shingle sets,
-        # toolbox working frames) outside the timed section via the cache
-        # handles the operators expose; clearCache stays as a backstop for
-        # any frame without a handle. Leaked cache blocks otherwise
-        # accumulate over the session and the growing GC/eviction pressure
-        # skews every later measurement.
-        try:
-            if df is not None:
-                release_caches(df)
-        except Exception:
-            pass
+        # toolbox working frames) outside the timed section; a failed
+        # release raises. clearCache stays as a backstop. Leaked cache
+        # blocks otherwise accumulate over the session and the growing
+        # GC/eviction pressure skews every later measurement.
+        if df is not None:
+            release_caches(df)
         spark.catalog.clearCache()
 
     # Contention guard: this host shows occasional noisy-neighbor load
@@ -459,8 +455,8 @@ def main() -> None:
                 prev_py_candidate = float(rec_doc["py_control_candidate"])
             if isinstance(rec_doc.get("frozen_streak"), int):
                 prev_streak = rec_doc["frozen_streak"]
-    except Exception:
-        pass
+    except Exception as exc:
+        print(f"[bench] record load failed: {exc!r}", file=sys.stderr)
     ok = sorted(v for v in timings.values() if v is not None)
     if ok:
         median = ok[len(ok) // 2]
@@ -479,8 +475,8 @@ def main() -> None:
                     "noop"
                 ).save()
                 timings[name] = min(t, round(time.perf_counter() - t0, 3))
-            except Exception:
-                pass
+            except Exception as exc:
+                print(f"[bench] retime {name} failed: {exc!r}", file=sys.stderr)
             spark.catalog.clearCache()
             print(f"[bench] retimed {name}: {timings[name]}s", file=sys.stderr)
 
@@ -511,14 +507,14 @@ def main() -> None:
         control = external_control_time(spark)
         if prev_control:
             control_ratio = control / prev_control
-    except Exception:
-        pass
+    except Exception as exc:
+        print(f"[bench] jvm control failed: {exc!r}", file=sys.stderr)
     try:
         py_control = python_control_time(spark)
         if prev_py_control:
             py_control_ratio = py_control / prev_py_control
-    except Exception:
-        pass
+    except Exception as exc:
+        print(f"[bench] python control failed: {exc!r}", file=sys.stderr)
     freeze, streak = resolve_freeze(
         inflated, control_ratio, prev_streak, py_control_ratio=py_control_ratio
     )
@@ -563,8 +559,8 @@ def main() -> None:
                 },
                 fh,
             )
-    except Exception:
-        pass
+    except Exception as exc:
+        print(f"[bench] record write failed: {exc!r}", file=sys.stderr)
     # Output order (VERDICT r15 #2): the contract's full one-line JSON
     # first (humans / archaeology — its head truncates in the driver's
     # 2000-char tail, harmlessly), then the per-query map again as

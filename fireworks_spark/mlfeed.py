@@ -317,8 +317,8 @@ def negative_samples(
     Two documented consequences of the closed-form draw: an anchor can
     repeat a negative when N divides 40503*(j'-j) (callers needing
     distinct negatives per anchor should dedupe on (id, neg_id)), and the
-    row-index pass persists its range buckets — the handle is exposed as
-    ``_row_index_cache`` on the result (release via dedup.release_caches).
+    row-index pass persists its range buckets, which ``release_caches``
+    frees once the result is materialized.
 
     Returns (anchor id, neg_rank's id as neg_id, j).
     """
@@ -343,6 +343,4 @@ def negative_samples(
     other = ranked.select(
         F.col("_r").alias("_neg"), F.col(id_col).alias("neg_id")
     )
-    out = cand.join(other, "_neg").select(id_col, "neg_id", "j")
-    out._row_index_cache = ranked._row_index_cache
-    return out
+    return cand.join(other, "_neg").select(id_col, "neg_id", "j")

@@ -24,49 +24,9 @@ from pyspark.sql import functions as F
 
 from fireworks_spark.functions.rounding import pround
 from fireworks_spark.functions.text import normalize_text, words
+from fireworks_spark.session import persist, release_caches  # noqa: F401
 
 _log = logging.getLogger(__name__)
-
-# Operators below persist intermediate frames (shingle sets) that several
-# branches of one query DAG share. The persist is load-bearing — without it
-# each branch re-tokenizes the corpus — but a library must also hand the
-# caller a release path, so every returned frame carries the list of frames
-# it cached under this attribute. ``release_caches(result)`` after the
-# result is materialized frees the executors' cache blocks; transformations
-# that BUILD ON a cached result (dup_clusters over minhash pairs, etc.)
-# propagate the handles to their own output.
-_CACHES_ATTR = "_fw_caches"
-
-
-def keep_caches(out: DataFrame, *sources: DataFrame, extra=()) -> DataFrame:
-    """Public re-attach helper for WRAPPER DataFrames: every orderBy/
-    select/filter/withColumn returns a new DataFrame without python
-    attributes, so an operator result's release handles (``_fw_caches``,
-    plus toolbox's legacy ``_row_index_cache``) would be orphaned and the
-    persisted frames only freed by a clearCache backstop. Call
-    ``keep_caches(wrapped, original, ...)`` to carry every handle the
-    sources hold onto the wrapped result (plus ``extra`` raw handles);
-    ``release_caches(result)`` then frees them all. This is the one
-    convention query modules should use (review r12 — previously a
-    per-module shim and direct ``_attach_caches`` calls coexisted)."""
-    return _attach_caches(out, *sources, extra=extra)
-
-
-def _attach_caches(out: DataFrame, *sources: DataFrame, extra=()) -> DataFrame:
-    handles: list = []
-    for s in sources:
-        handles += getattr(s, _CACHES_ATTR, [])
-        # harvest toolbox.with_row_index / with_running_total's legacy
-        # single-handle convention too, so one wrapper re-attach call
-        # propagates EVERY release handle a source carries
-        rc = getattr(s, "_row_index_cache", None)
-        if rc is not None:
-            handles.append(rc)
-    handles += list(extra)
-    if handles:
-        setattr(out, _CACHES_ATTR, handles)
-    return out
-
 
 #: Projected pairwise-comparison budget above which the quadratic-by-
 #: contract paths (blocked Hamming popcount, blocked cosine gram, exact
@@ -98,17 +58,6 @@ def _quadratic_guard(n_items: int, op: str, alternative: str) -> int:
             stacklevel=3,
         )
     return proj
-
-
-def release_caches(df: DataFrame) -> None:
-    """Unpersist every intermediate frame cached while building ``df``
-    (no-op for frames that cached nothing). Call AFTER materializing the
-    result — the cached frames are part of its lineage."""
-    for c in getattr(df, _CACHES_ATTR, []):
-        c.unpersist()
-    rc = getattr(df, "_row_index_cache", None)
-    if rc is not None:  # toolbox.with_row_index's pre-existing handle
-        rc.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -213,9 +162,9 @@ def shingle_candidates(
     documents overlap exclusively in corpus-wide boilerplate, which carries
     no dedup signal anyway).
     """
-    sets = shingle_sets(df, id_col, text_col, n).persist()
-    cand, _, caches = _candidate_stats(sets, id_col, df_cap)
-    return _attach_caches(cand.select("ida", "idb"), extra=[sets] + caches)
+    sets = persist(shingle_sets(df, id_col, text_col, n))
+    cand, _ = _candidate_stats(sets, id_col, df_cap)
+    return cand.select("ida", "idb")
 
 
 def _candidate_stats(
@@ -230,9 +179,7 @@ def _candidate_stats(
     verify) would otherwise re-tokenize the corpus once per branch, which
     measured 5x slower than the persisted working set at sf0.1.
 
-    Returns (cand, stats, caches) where cand = (ida, idb, _common) —
-    caches lists the frames persisted here (the hot-shingle table) for the
-    caller to attach to its release handle; _common is the
+    Returns (cand, stats) where cand = (ida, idb, _common) — _common is the
     number of shared shingles NOT dropped by df_cap (an exact lower bound on
     |A ∩ B|) — and stats = (_id, _sz, _hot) with _sz the full distinct
     shingle count and _hot how many of those exceeded df_cap. The pair count
@@ -247,13 +194,12 @@ def _candidate_stats(
     if df_cap is not None:
         # persisted: consumed by BOTH the hot-count join and the cold
         # anti-join — unpersisted, the corpus-wide frequency aggregation
-        # runs once per consumer. Handle rides the cand frame.
-        hot = (
+        # runs once per consumer.
+        hot = persist(
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > df_cap)
             .select("shingle")
-            .persist()
         )
         hotcnt = (
             sh.join(hot, "shingle").groupBy(id_col).agg(
@@ -277,8 +223,7 @@ def _candidate_stats(
         .groupBy("ida", "idb")
         .agg(F.count(F.lit(1)).alias("_common"))
     )
-    caches = [hot] if df_cap is not None else []
-    return cand, stats, caches
+    return cand, stats
 
 
 def _prefix_len(sz: Column, t: float) -> Column:
@@ -315,7 +260,7 @@ def _prefix_candidate_stats(
     id_col: str,
     threshold: float,
     k: int | None = None,
-) -> tuple[DataFrame, DataFrame, list]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Prefix-filtered candidate pairs: recall-EXACT at any corpus scale.
 
     This replaces the global ``df_cap`` heuristic as the default candidate
@@ -346,14 +291,15 @@ def _prefix_candidate_stats(
     lifesaver: at t=0.5 the k=1 candidates are a flood of
     share-exactly-one-shingle pairs that the verify stage then drowns in.
 
-    Returns (cand, stats, caches): cand = (ida, idb, _common) where
+    Returns (cand, stats, pre): cand = (ida, idb, _common) where
     _common is the EXACT count of shared shingles inside both documents'
     extended prefixes — at every k, including k=1, where the PPJoin
     positional filter runs as a pair-survival test inside the aggregate
     so it can no longer thin the count (r10 verdict #4); stats =
     (_id, _sz, _hot) where _hot = max(ceil(t'*_sz) - k, 0) is the
     per-document count of non-posted shingles, closed-form from the
-    size — no extra aggregation.
+    size — no extra aggregation; pre = the persisted posted-prefix frame
+    (id, shingle, _rn, _sz) both join sides scan.
 
     The caller's prune bound |A∩B| <= _common + _hotA + _hotB is EXACT
     for every k: each shared shingle is either inside both extended
@@ -376,7 +322,7 @@ def _prefix_candidate_stats(
     order = Window.partitionBy(id_col).orderBy("_df", "shingle")
     # persisted: BOTH sides of the candidate self-join scan this frame —
     # unpersisted, the dfreq join + per-doc ranking window run twice
-    pre = (
+    pre = persist(
         sh.join(dfreq, "shingle")
         .withColumn("_rn", F.row_number().over(order))
         .filter(
@@ -384,7 +330,6 @@ def _prefix_candidate_stats(
         )
         .filter(F.col("_df") >= 2)  # df=1 cannot collide; exact to drop
         .select(id_col, "shingle", "_rn", "_sz")
-        .persist()
     )
     a = pre.select(
         F.col(id_col).alias("ida"), "shingle",
@@ -460,7 +405,7 @@ def _prefix_candidate_stats(
             F.ceil(F.lit(t) * F.size("shingles")) - k, F.lit(0)
         ).cast("long").alias("_hot"),
     )
-    return cand, stats, [pre]
+    return cand, stats, pre
 
 
 # --------------------------------------------------------------------------
@@ -543,25 +488,23 @@ def jaccard_pairs(
     corpora. OPT-IN because it executes a Spark job at plan-construction
     time (the funnel skew probe's contract, Pipe.funnel).
     """
-    sets = shingle_sets(df, id_col, text_col, n).persist()
-    caches: list = []
+    sets = persist(shingle_sets(df, id_col, text_col, n))
     # allowance for shared shingles the candidate groupBy could not count:
     # df_cap path -> an uncounted shared shingle is hot in BOTH docs (min);
     # prefix path -> it is outside at least one doc's prefix (sum).
     allow = F.least("_ha", "_hb")
     if candidates is None:
         if df_cap is None:
-            cand, stats, caches = _prefix_candidate_stats(
+            cand, stats, pre = _prefix_candidate_stats(
                 sets, id_col, threshold
             )
             allow = F.col("_ha") + F.col("_hb")
             if size_check:
-                # caches[0] is the persisted posted-prefix frame (also
+                # pre is the persisted posted-prefix frame (also
                 # consumed by the candidate join below, so this probe's
                 # scan is reused, not wasted). Projected candidate rows:
                 # every posted shingle with prefix-df d contributes
                 # d*(d-1)/2 (ida < idb) join rows.
-                pre = caches[0]
                 proj = int(
                     pre.groupBy("shingle")
                     .agg(F.count(F.lit(1)).alias("_d"))
@@ -590,7 +533,7 @@ def jaccard_pairs(
                         stacklevel=2,
                     )
         else:
-            cand, stats, caches = _candidate_stats(sets, id_col, df_cap)
+            cand, stats = _candidate_stats(sets, id_col, df_cap)
     else:
         cand = candidates.select("ida", "idb").distinct().withColumn(
             "_common", F.lit(None).cast("long")
@@ -649,11 +592,7 @@ def jaccard_pairs(
         .select("ida", "idb", pround(jac, 3).alias("jac"))
         .filter(F.col("jac") >= threshold)
     )
-    return _attach_caches(
-        out,
-        *([candidates] if candidates is not None else []),
-        extra=[sets] + caches,
-    )
+    return out
 
 
 def jaccard_join(
@@ -684,15 +623,14 @@ def jaccard_join(
     kill nearly every candidate before data moves; (3)
     per-pair array_intersect verify over ALL shingles, so reported values
     are exact. Both shingle-set frames persist (each feeds candidates,
-    stats, and verify) and expose release handles via ``release_caches``.
+    stats, and verify); ``release_caches`` frees them.
     """
-    sl = shingle_sets(left, id_col, text_col, n).persist()
-    sr = shingle_sets(right, id_col, text_col, n).persist()
+    sl = persist(shingle_sets(left, id_col, text_col, n))
+    sr = persist(shingle_sets(right, id_col, text_col, n))
     shl = sl.select(F.col(id_col).alias("lid"), F.explode("shingles").alias("shingle"))
     shr = sr.select(F.col(id_col).alias("rid"), F.explode("shingles").alias("shingle"))
     allow = F.least("_hl", "_hr")  # df_cap: uncounted shared is hot in BOTH
     prefix_hot = None
-    prefix_caches: list = []
     if candidates is not None:
         cand = candidates.select("lid", "rid").distinct().withColumn(
             "_common", F.lit(None).cast("long")
@@ -720,14 +658,12 @@ def jaccard_join(
         )
         # persisted: both corpora's prefix selections scan the union-wide
         # frequency table — unpersisted it aggregates twice
-        dfreq = (
+        dfreq = persist(
             sll.select("shingle")
             .unionAll(srr.select("shingle"))
             .groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
-            .persist()
         )
-        prefix_caches = [dfreq]
 
         def _prefix(sh: DataFrame, key: str, p: str, q: str) -> DataFrame:
             order = Window.partitionBy(key).orderBy("_df", "shingle")
@@ -804,14 +740,13 @@ def jaccard_join(
     if df_cap is not None:
         # persisted: four consumers (two anti-joins, two hot-count joins)
         # would otherwise each recompute the union-wide frequency agg
-        hot = (
+        hot = persist(
             shl.select("shingle")
             .unionAll(shr.select("shingle"))
             .groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > df_cap)
             .select("shingle")
-            .persist()
         )
         coldl = shl.join(hot, "shingle", "left_anti")
         coldr = shr.join(hot, "shingle", "left_anti")
@@ -865,8 +800,7 @@ def jaccard_join(
         .select("lid", "rid", pround(jac, 3).alias("jac"))
         .filter(F.col("jac") >= threshold)
     )
-    extra = [sl, sr] + ([hot] if df_cap is not None else []) + prefix_caches
-    return _attach_caches(out, extra=extra)
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -1232,7 +1166,6 @@ def _blocked_hamming_id_pairs(
     import pandas as pd
 
     gsig = ids.groupBy("_sig").agg(F.collect_list("id").alias("_ids"))
-    handles: list = []
     if n is None:
         mkey = _routing_key(ids, "blocked_n")
         if mkey is not None and mkey in _ROUTING_CACHE:
@@ -1241,8 +1174,7 @@ def _blocked_hamming_id_pairs(
             # persisted BEFORE the sizing count so the pair job reuses the
             # aggregation instead of recomputing it and its upstream (for
             # simhash, a full Python pass over the corpus)
-            gsig = gsig.persist()
-            handles.append(gsig)
+            gsig = persist(gsig)
             n = gsig.count()
             if mkey is not None:
                 if len(_ROUTING_CACHE) >= _ROUTING_CACHE_MAX:
@@ -1400,7 +1332,7 @@ def _blocked_hamming_id_pairs(
     out = tasks.groupBy("_t").applyInPandas(
         _emit, "ida long, idb long, hamming int"
     )
-    return _attach_caches(out, extra=handles)
+    return out
 
 
 def hamming_pairs(
@@ -1477,7 +1409,7 @@ def hamming_pairs(
     # join's two sides and the verify all branch from the distinct
     # signatures — unpersisted, the signature stage (for simhash, a
     # full Python pass over the corpus) would run for each consumer
-    dsig = dsig.persist()
+    dsig = persist(dsig)
     bands = dsig.select(
         "_sig", F.explode(band_structs).alias("bd")
     ).select(
@@ -1550,7 +1482,6 @@ def hamming_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    sig_pairs = _attach_caches(sig_pairs, extra=[dsig])
     cross = (
         sig_pairs.join(ids.select(F.col("id").alias("_ia"), F.col("_sig").alias("sha")), "sha")
         .join(ids.select(F.col("id").alias("_ib"), F.col("_sig").alias("shb")), "shb")
@@ -1566,8 +1497,7 @@ def hamming_pairs(
         .filter(F.col("ida") < F.col("idb"))
         .select("ida", "idb", F.lit(0).alias("hamming"))
     )
-    out = cross.unionByName(same)
-    return _attach_caches(out, sig_pairs)
+    return cross.unionByName(same)
 
 
 def simhash_pairs(
@@ -2227,11 +2157,10 @@ def bloom_decontaminate(
     """
     # Persisted: the bitset build and the exact verify both consume the
     # benchmark shingles; without the persist the benchmark tokenizes
-    # twice. Caller releases via release_caches(result).
-    bench_sh = (
+    # twice.
+    bench_sh = persist(
         shingle_table(benchmark, id_col, text_col, n)
         .select("shingle")
-        .persist()
     )
     bits = bloom_bitset(bench_sh, "shingle", num_bits=num_bits, k=k)
     candidates = shingle_table(corpus, id_col, text_col, n).where(
@@ -2245,7 +2174,7 @@ def bloom_decontaminate(
         .distinct()
     )
     out = corpus.join(tainted, id_col, "left_anti")
-    return _attach_caches(out, extra=[bench_sh])
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -2291,7 +2220,7 @@ def dup_clusters(
     # directed distinct edge set from the SAME persisted frame, so the
     # pairs lineage (the dominant cost for jaccard/minhash sources) still
     # executes exactly once either way.
-    p = pairs.select(a, b).persist()
+    p = persist(pairs.select(a, b))
     n_pairs = p.count()  # materializes the persisted pair list
     if 2 * n_pairs <= local_edge_limit:
         edges = p.collect()
@@ -2319,11 +2248,11 @@ def dup_clusters(
         out = pairs.sparkSession.createDataFrame(
             rows, "id long, cluster long"
         )
-        return _attach_caches(out, pairs)
+        return out
     # Distributed regime: both edge directions from ONE scan of the
     # persisted pair list (explode, not union — union's two branches would
     # each re-scan it), deduped once, then iterated over.
-    e = (
+    e = persist(
         p.select(
             F.explode(
                 F.array(
@@ -2334,13 +2263,11 @@ def dup_clusters(
         )
         .select("_e.src", "_e.dst")
         .distinct()
-        .persist()
     )
-    labels = (
+    labels = persist(
         e.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("cluster", F.col("id"))
-        .persist()
     )
     # Convergence check: labels only ever DECREASE under min-propagation,
     # so sum(labels) strictly decreases until the fixpoint — comparing two
@@ -2356,7 +2283,7 @@ def dup_clusters(
             .agg(F.min("cluster").alias("_nmin"))
             .withColumnRenamed("src", "id")
         )
-        new = (
+        new = persist(
             labels.join(nbr, "id", "left")
             .select(
                 "id",
@@ -2364,7 +2291,6 @@ def dup_clusters(
                     F.col("cluster"), F.coalesce("_nmin", "cluster")
                 ).alias("cluster"),
             )
-            .persist()
         )
         new_sum = new.agg(
             F.sum(F.col("cluster").cast("decimal(38,0)"))
@@ -2376,7 +2302,7 @@ def dup_clusters(
         prev_sum = new_sum
     e.unpersist()
     p.unpersist()
-    return _attach_caches(labels, pairs)
+    return labels
 
 
 
@@ -2401,9 +2327,8 @@ def leakage_safe_split(
     dup density, not corpus size) + one id-keyed left join back to the
     corpus — the same cost class as computing the clusters at all.
     """
-    cc = dup_clusters(pairs)  # rename below drops attached attributes,
-    clusters = cc.withColumnRenamed("id", id_col)  # so keep cc for handles
-    out = (
+    clusters = dup_clusters(pairs).withColumnRenamed("id", id_col)
+    return (
         df.select(id_col)
         .join(clusters, id_col, "left")
         .select(
@@ -2413,7 +2338,6 @@ def leakage_safe_split(
             .alias(split_col),
         )
     )
-    return _attach_caches(out, cc)
 
 def keep_canonical(
     df: DataFrame,
@@ -2430,7 +2354,7 @@ def keep_canonical(
     drop = clusters.filter(F.col("cluster") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
-    return _attach_caches(df.join(drop, id_col, "left_anti"), clusters)
+    return df.join(drop, id_col, "left_anti")
 
 
 def line_dedup(
@@ -2469,14 +2393,15 @@ def line_dedup(
     """
     # Persisted: the exploded lines feed BOTH the first-occurrence agg and
     # the keep-join's left side — unpersisted, the upstream lineation and
-    # explode run twice (caller releases via release_caches(result), the
-    # shared-frame convention at the top of this module).
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), F.lit(delim))).alias(
-            "pos", "line"
-        ),
-    ).persist()
+    # explode run twice.
+    lines = persist(
+        df.select(
+            F.col(id_col),
+            F.posexplode(F.split(F.col(text_col), F.lit(delim))).alias(
+                "pos", "line"
+            ),
+        )
+    )
     keepers = (
         lines.groupBy("line")
         .agg(F.min(F.struct(id_col, "pos")).alias("first"))
@@ -2499,15 +2424,14 @@ def line_dedup(
         ).alias("_kept_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )
-    return _attach_caches(
+    return (
         df.select(id_col)
         .join(rebuilt, id_col, "left")
         .select(
             id_col,
             F.coalesce("_kept_text", F.lit("")).alias(text_col),
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        ),
-        extra=[lines],
+        )
     )
 
 
@@ -2596,16 +2520,14 @@ def substring_dedup(
     # persist 3.89s / 4.08s (-14%); same direction at sf0.1 (2.40/3.07 vs
     # 2.32/2.64). MEMORY_AND_DISK default keeps the at-scale risk bounded
     # (the table is ~k x corpus tokens; spill beats re-enumeration since
-    # generation is compute-bound, guide §5). Handle released by callers
-    # via release_caches (keep_caches propagates it).
-    occ = (
+    # generation is compute-bound, guide §5).
+    occ = persist(
         toks.select("_id", "_w", F.explode(starts).alias("_p"))
         .select(
             "_id",
             "_p",
             (F.xxhash64(win) if use_hash else win).alias("_key"),
         )
-        .persist()
     )
     firsts = occ.groupBy("_key").agg(
         F.min(F.struct(F.col("_id"), F.col("_p"))).alias("_f"),
@@ -2646,7 +2568,7 @@ def substring_dedup(
             .alias("n_removed"),
         )
     )
-    return _attach_caches(out, extra=[occ])
+    return out
 
 
 def chunk_dup_stats(

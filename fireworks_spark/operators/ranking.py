@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from fireworks_spark.functions.rounding import pround
 from fireworks_spark.operators.spread import spread
+from fireworks_spark.session import persist
 
 __all__ = [
     "tokens",
@@ -389,19 +390,11 @@ def pack_sequences(
     run = with_running_total(
         counted, [id_col], "n_tokens", total_col="_end"
     )
-    from fireworks_spark.operators.dedup import _attach_caches
-
-    # select drops python attributes — carry the running-total range cache
-    return _attach_caches(
-        run.select(
-            id_col,
-            "n_tokens",
-            (F.col("_end") - F.col("n_tokens")).alias("start_offset"),
-            F.floor(
-                (F.col("_end") - F.col("n_tokens")) / budget
-            ).alias("pack_id"),
-        ),
-        run,
+    return run.select(
+        id_col,
+        "n_tokens",
+        (F.col("_end") - F.col("n_tokens")).alias("start_offset"),
+        F.floor((F.col("_end") - F.col("n_tokens")) / budget).alias("pack_id"),
     )
 
 
@@ -695,7 +688,7 @@ def fit_hashed_classifier(
     Returns (weights, bias) for :func:`hashed_score`."""
     import math
 
-    feats = hashed_features(df, dim, id_col, text_col).persist()
+    feats = persist(hashed_features(df, dim, id_col, text_col))
     labels = df.select(id_col, F.col(label_col).cast("double").alias("_y"))
     n_docs = labels.count()
     w = [0.0] * dim

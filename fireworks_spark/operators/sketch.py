@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fireworks_spark.session import persist
+
 __all__ = ["mg_partition_candidates", "heavy_hitters_sketch"]
 
 
@@ -91,7 +93,7 @@ def heavy_hitters_sketch(
     doc), then an exact recount restricted to candidates (no false
     positives). Returns (key_col, cnt) sorted by cnt desc."""
     spark = df.sparkSession
-    summaries = mg_partition_candidates(df, key_col, capacity).persist()
+    summaries = persist(mg_partition_candidates(df, key_col, capacity))
     try:
         # all three collects are bounded by partitions x capacity rows;
         # pulling them off the cached pass-1 result means pass 1 runs ONCE

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from fireworks_spark.operators.spread import spread
 from fireworks_spark.functions.rounding import pround
 from fireworks_spark.functions.text import normalize_text, words
+from fireworks_spark.session import persist
 
 # language -> stopword alternation used by the n-gram/stopword language
 # heuristic; mirrored verbatim in the DuckDB oracle (queries_pipeline.py)
@@ -517,9 +518,7 @@ def domain_overlap(
             _estimated_input_bytes(df) >= DOMAIN_OVERLAP_SINGLE_SCAN_BYTES
         )
     if single_scan:
-        from fireworks_spark.operators.dedup import keep_caches
-
-        toksets = (
+        toksets = persist(
             spread(df)
             .select(
                 F.col(by).alias("_d"), F.explode(words(text_col)).alias("_t")
@@ -527,7 +526,6 @@ def domain_overlap(
             .filter(F.col("_t") != "")
             .groupBy("_t")
             .agg(F.array_sort(F.collect_set("_d")).alias("_ds"))
-            .persist()
         )
         sizes = (
             toksets.select(F.explode("_ds").alias("_d"))
@@ -574,7 +572,7 @@ def domain_overlap(
                 ).alias("jac"),
             )
         )
-        return keep_caches(out, extra=[toksets])
+        return out
     vocab = (
         spread(df)
         .select(F.col(by).alias("_d"), F.explode(words(text_col)).alias("_t"))

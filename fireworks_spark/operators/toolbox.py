@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fireworks_spark.functions.rounding import pround
+from fireworks_spark.session import persist
 
 
 # --------------------------------------------------------------------------
@@ -91,15 +92,13 @@ def with_row_index(
     3. row_number() windowed PER BUCKET (distributed) + bucket offset.
 
     All JVM-side; cost over a naive global window is the counting job plus
-    the cache footprint (MEMORY_AND_DISK — spills, never recomputes). The
-    cache handle is exposed on the result as ``_row_index_cache`` so callers
-    feeding huge inputs can ``.unpersist()`` it when done.
+    the cache footprint (MEMORY_AND_DISK — spills, never recomputes).
+    ``release_caches`` frees the buckets once the result is materialized.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    pid = (
+    pid = persist(
         df.repartitionByRange(n, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
     counts = pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
     acc = 0
@@ -109,13 +108,11 @@ def with_row_index(
         acc += r["_n"]
     omap = F.create_map(*kv) if kv else F.create_map(F.lit(0), F.lit(0))
     bw = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = pid.withColumn(
+    return pid.withColumn(
         index_col,
         (F.row_number().over(bw) - 1 + F.element_at(omap, F.col("_pid")))
         .cast("long"),
     ).drop("_pid")
-    out._row_index_cache = pid
-    return out
 
 
 def with_running_total(
@@ -136,16 +133,15 @@ def with_running_total(
     3. per-bucket cumulative window + the bucket's prefix offset.
 
     ``value_col`` may be a column name or Column expression; the result is
-    the INCLUSIVE running total (row's own value included). The cache
-    handle is exposed as ``_row_index_cache`` like with_row_index.
+    the INCLUSIVE running total (row's own value included).
+    ``release_caches`` frees the buckets, as for with_row_index.
     """
     val = F.col(value_col) if isinstance(value_col, str) else value_col
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    pid = (
+    pid = persist(
         df.withColumn("_val", val.cast("long"))
         .repartitionByRange(n, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
     sums = pid.groupBy("_pid").agg(F.sum("_val").alias("_s")).collect()
     acc = 0
@@ -159,16 +155,11 @@ def with_running_total(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
-        pid.withColumn(
-            total_col,
-            (F.sum("_val").over(bw) + F.element_at(omap, F.col("_pid")))
-            .cast("long"),
-        )
-        .drop("_pid", "_val")
-    )
-    out._row_index_cache = pid
-    return out
+    return pid.withColumn(
+        total_col,
+        (F.sum("_val").over(bw) + F.element_at(omap, F.col("_pid")))
+        .cast("long"),
+    ).drop("_pid", "_val")
 
 
 def shuffle(df: DataFrame, seed: int | None = None) -> DataFrame:
@@ -200,14 +191,10 @@ def interleave(dfs: list[DataFrame], order_cols: list[str]) -> DataFrame:
     global position comes from with_row_index (distributed two-pass
     zipWithIndex), so no single-partition window anywhere.
     """
-    from fireworks_spark.operators.dedup import _attach_caches
-
     k = len(dfs)
     parts = []
-    handles = []
     for i, d in enumerate(dfs):
         ri = with_row_index(d, order_cols, "_j")
-        handles.append(ri._row_index_cache)
         parts.append(
             ri.select(
                 *d.columns,
@@ -218,9 +205,7 @@ def interleave(dfs: list[DataFrame], order_cols: list[str]) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # the select/union wrappers drop python attributes, so the per-source
-    # row-index caches are re-attached here (release_caches frees them)
-    return _attach_caches(out, extra=handles)
+    return out
 
 
 def hstack(
@@ -241,13 +226,9 @@ def hstack(
     dup = set(a.columns) & set(b.columns)
     if dup:
         raise ValueError(f"hstack requires disjoint columns; shared: {dup}")
-    from fireworks_spark.operators.dedup import _attach_caches
-
     ra = with_row_index(a, a_order, "_pos")
     rb = with_row_index(b, b_order, "_pos")
-    # join/drop return new DataFrames without python attributes — carry
-    # both sides' row-index caches on the result for release_caches
-    return _attach_caches(ra.join(rb, "_pos", "inner").drop("_pos"), ra, rb)
+    return ra.join(rb, "_pos", "inner").drop("_pos")
 
 
 def index_map(
@@ -473,11 +454,7 @@ def token_budget_sample(
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         out = staged.withColumn("cum_tokens", F.sum(token_col).over(w))
-    res = out.filter(F.col("cum_tokens") <= budget).drop("_u")
-    cache = getattr(out, "_row_index_cache", None)
-    if cache is not None:  # propagate the global path's release handle
-        res._row_index_cache = cache
-    return res
+    return out.filter(F.col("cum_tokens") <= budget).drop("_u")
 
 
 def temperature_mix(

@@ -22,6 +22,7 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 
 from fireworks_spark.operators import toolbox
+from fireworks_spark.session import persist
 
 
 class Pipe:
@@ -162,8 +163,10 @@ class Pipe:
         return Pipe(heavy_hitters_sketch(self.df, key_col, capacity=capacity))
 
     def cache(self) -> "Pipe":
-        """CachingPipe / MessageCache (P5/P6/P22): block-manager persist."""
-        return Pipe(self.df.persist())
+        """CachingPipe / MessageCache (P5/P6/P22): block-manager persist.
+        Free it with ``release_caches`` once the results built on it are
+        materialized."""
+        return Pipe(persist(self.df))
 
     # -- corpus operators -------------------------------------------------
     def dedup(

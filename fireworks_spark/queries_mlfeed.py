@@ -136,12 +136,8 @@ def q147_media_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = multimodal.media_dup_pairs(
         d, "media", "doc_id", max_hamming=8, num_bits=48
     )
-    from fireworks_spark.operators.dedup import keep_caches
-
-    return keep_caches(
-        out.withColumn("hamming", F.col("hamming").cast("long"))
-        .orderBy("ida", "idb"),
-        out,
+    return out.withColumn("hamming", F.col("hamming").cast("long")).orderBy(
+        "ida", "idb"
     )
 
 
@@ -154,13 +150,9 @@ def q140_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     out = mlfeed.negative_samples(d, k=4)
-    from fireworks_spark.operators.dedup import keep_caches
-
-    return keep_caches(
-        out.select("doc_id", "neg_id", F.col("j").cast("long").alias("j"))
-        .orderBy("doc_id", "j"),
-        out,
-    )
+    return out.select(
+        "doc_id", "neg_id", F.col("j").cast("long").alias("j")
+    ).orderBy("doc_id", "j")
 
 
 MLFEED_QUERIES = {

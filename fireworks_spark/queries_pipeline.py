@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from fireworks_spark.operators import dedup, ranking, similarity, textstats
 from fireworks_spark.operators.spread import spread
+from fireworks_spark.session import persist
 from fireworks_spark.tables import table
 
 # --- shared DuckDB SQL fragments (mirror fireworks_spark.functions.text) ---
@@ -74,8 +75,7 @@ def _cos(a: str, b: str) -> str:
 
 def q30_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    out = dedup.exact_dedup(d)
-    return dedup.keep_caches(out.orderBy("keep_id"), out)
+    return dedup.exact_dedup(d).orderBy("keep_id")
 
 
 def q31_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,8 +85,7 @@ def q31_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf1 (50k docs) real near-dup pairs share only shingles hotter than
     the cap, silently losing pairs (caught by the round-9 sf1 sweep)."""
     d = table(spark, sf_dir, "documents")
-    out = dedup.jaccard_pairs(d, threshold=0.5)
-    return dedup.keep_caches(out.orderBy("ida", "idb"), out)
+    return dedup.jaccard_pairs(d, threshold=0.5).orderBy("ida", "idb")
 
 
 def q134_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,7 +100,7 @@ def q134_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("doc_id") % 2 == 1),
         threshold=0.5,
     )
-    return dedup.keep_caches(out.orderBy("lid", "rid"), out)
+    return out.orderBy("lid", "rid")
 
 
 def q135_minhash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,15 +114,14 @@ def q135_minhash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("doc_id") % 2 == 1),
         threshold=0.8,
     )
-    return dedup.keep_caches(out.orderBy("lid", "rid"), out)
+    return out.orderBy("lid", "rid")
 
 
 def q32_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates + exact-Jaccard verify at threshold 0.8 (the
     regime where 16x2 banding has ~certain recall; see module docstring)."""
     d = table(spark, sf_dir, "documents")
-    out = dedup.minhash_dedup_pairs(d, threshold=0.8)
-    return dedup.keep_caches(out.orderBy("ida", "idb"), out)
+    return dedup.minhash_dedup_pairs(d, threshold=0.8).orderBy("ida", "idb")
 
 
 def q33_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,7 +135,7 @@ def q33_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup.simhash_pairs(
         d, max_hamming=3, token_hash=dedup.portable_token_hash60
     )
-    return dedup.keep_caches(out.orderBy("ida", "idb"), out)
+    return out.orderBy("ida", "idb")
 
 
 def q34_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,8 +143,7 @@ def q34_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates meet on a bounded (band_idx, band_key) equi-join; auto-tuned
     bands give miss probability <= 1e-6 at the 0.5 boundary)."""
     e = table(spark, sf_dir, "embeddings")
-    out = dedup.embedding_dup_pairs(e, threshold=0.5)
-    return dedup.keep_caches(out.orderBy("ida", "idb"), out)
+    return dedup.embedding_dup_pairs(e, threshold=0.5).orderBy("ida", "idb")
 
 
 def q42_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,10 +156,7 @@ def q42_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(d, threshold=CLOSURE_JACCARD_THRESHOLD)
     out = dedup.dup_clusters(pairs)
-    return dedup.keep_caches(
-        out.select(F.col("id").alias("doc_id"), "cluster").orderBy("doc_id"),
-        out,
-    )
+    return out.select(F.col("id").alias("doc_id"), "cluster").orderBy("doc_id")
 
 
 def q43_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,8 +165,7 @@ def q43_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the same LSH-candidate route as q42 (recall-certain at 0.8)."""
     d = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(d, threshold=CLOSURE_JACCARD_THRESHOLD)
-    out = dedup.keep_canonical(d, pairs)
-    return dedup.keep_caches(out.select("doc_id").orderBy("doc_id"), out)
+    return dedup.keep_canonical(d, pairs).select("doc_id").orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -418,8 +411,7 @@ def q145_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence ranking, span coverage and document reassembly in
     SQL; the xxhash64 scale path is asserted equal in test_dedup."""
     d = table(spark, sf_dir, "documents")
-    out = dedup.substring_dedup(d, k=20, use_hash=False)
-    return dedup.keep_caches(out.orderBy("doc_id"), out)
+    return dedup.substring_dedup(d, k=20, use_hash=False).orderBy("doc_id")
 
 
 def q143_fuzzy_join_dist2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,10 +675,8 @@ def q103_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lb in sorted(by_label)
     ]
     out = dedup.semdedup(e, eps=0.5, centroids=centroids)
-    return dedup.keep_caches(
-        out.withColumn("cluster", F.col("cluster").cast("long"))
-        .orderBy("vec_id"),
-        out,
+    return out.withColumn("cluster", F.col("cluster").cast("long")).orderBy(
+        "vec_id"
     )
 
 
@@ -761,18 +751,17 @@ def q157_filtered_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame
     Unlike q138's linear chain, this DAG FANS OUT: c4 feeds three
     branches and kept feeds both sides of the dedup self-join, so the
     shared frames are persisted (measured 72.6s -> 2.7s at sf0.1 — the
-    interpreted HOF rule chains re-evaluated per branch otherwise) with
-    release handles attached per the repo's cache convention."""
+    interpreted HOF rule chains re-evaluated per branch otherwise)."""
     
     d = table(spark, sf_dir, "documents")
     structured = d.select(
         "doc_id",
         F.regexp_replace("text", r"((\S+ ){7}\S+) ", "$1\n").alias("text"),
     )
-    c4 = textstats.c4_line_filter(structured, min_words_per_line=5).persist()
+    c4 = persist(textstats.c4_line_filter(structured, min_words_per_line=5))
     g = textstats.gopher_stats(c4)
     r = ranking.ngram_repetition(c4)
-    kept = (
+    kept = persist(
         c4.join(g.select("doc_id", "n_words", "dup_line_frac"), "doc_id")
         .join(r.select("doc_id", "rep_pass"), "doc_id")
         .filter(
@@ -780,13 +769,12 @@ def q157_filtered_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame
             & (F.col("dup_line_frac") <= 0.3)
             & F.col("rep_pass")
         )
-        .persist()
     )
     canon = kept.groupBy(
         F.md5(F.encode("text", "UTF-8")).alias("h")
     ).agg(F.min("doc_id").alias("doc_id"))
     final = kept.join(canon.select("doc_id"), "doc_id")
-    out = (
+    return (
         final.groupBy((F.col("doc_id") % 10).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -794,7 +782,6 @@ def q157_filtered_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("bucket")
     )
-    return dedup.keep_caches(out, extra=[c4, kept])
 
 
 def q37_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,10 +977,7 @@ def q98_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("_w") >= 1)
         .select("doc_id", lineated.alias("text"))
     )
-    out = dedup.line_dedup(lines_df)
-    # orderBy returns a NEW DataFrame without the _fw_caches attribute —
-    # re-attach so release_caches(result) frees the persisted lines frame.
-    return dedup.keep_caches(out.orderBy("doc_id"), out)
+    return dedup.line_dedup(lines_df).orderBy("doc_id")
 
 
 
@@ -1005,7 +989,7 @@ def q115_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(d, threshold=CLOSURE_JACCARD_THRESHOLD)
     out = dedup.leakage_safe_split(d, pairs, k=CLOSURE_SPLIT_K)
-    return dedup.keep_caches(out.orderBy("doc_id"), out)
+    return out.orderBy("doc_id")
 
 
 PIPELINE_QUERIES = {

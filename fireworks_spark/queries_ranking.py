@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fireworks_spark.operators import dedup, ranking
+from fireworks_spark.session import persist
 from fireworks_spark.tables import table
 
 _BM25_TERMS = ["spark", "join", "window"]
@@ -92,8 +93,7 @@ def q86_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the id-ordered corpus token stream — distributed two-pass cumsum, no
     single-partition window."""
     d = table(spark, sf_dir, "documents")
-    out = ranking.pack_sequences(d, budget=512)
-    return dedup.keep_caches(out.orderBy("doc_id"), out)
+    return ranking.pack_sequences(d, budget=512).orderBy("doc_id")
 
 
 def q87_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,11 +175,7 @@ def q129_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = d.filter(F.col("doc_id") % 89 == 0)
     corpus = d.filter(F.col("doc_id") % 89 != 0)
     out = dedup.bloom_decontaminate(corpus, bench)
-    # re-attach the release handle through the wrapper (select/orderBy
-    # return new DataFrames without python attributes)
-    return dedup.keep_caches(
-        out.select("doc_id", "source", "n_chars").orderBy("doc_id"), out
-    )
+    return out.select("doc_id", "source", "n_chars").orderBy("doc_id")
 
 
 # Dyadic weights (multiples of 1/16): sum-pooled scores are exact doubles
@@ -263,10 +259,9 @@ def q138_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # showed the HashAggregate(min(doc_id) by h) + its Exchange duplicated,
     # r15). The keep-list is ids only — metadata-sized at any corpus scale
     # (guide §8: decide with small rows), safe to persist.
-    keep = (
+    keep = persist(
         dedup.exact_dedup(corpus)
         .select(F.col("keep_id").alias("doc_id"))
-        .persist()
     )
     deduped = corpus.join(keep, "doc_id", "left_semi")
     clean = dedup.bloom_decontaminate(deduped, bench)
@@ -277,15 +272,7 @@ def q138_pretraining_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix = toolbox.weighted_sample(
         qual, "n_chars", k=10, key_col="doc_id", group_col="source", seed=7
     )
-    # carry bloom_decontaminate's release handle through the chain of
-    # wrapper DataFrames (filter/sample/select/orderBy drop attributes)
-    return dedup.keep_caches(
-        mix.select("doc_id", "source", "n_chars").orderBy(
-            "source", "doc_id"
-        ),
-        clean,
-        extra=[keep],
-    )
+    return mix.select("doc_id", "source", "n_chars").orderBy("source", "doc_id")
 
 
 def q89_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:

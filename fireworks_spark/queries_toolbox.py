@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fireworks_spark.functions.text import pad, words
-from fireworks_spark.operators import dedup, textstats, toolbox
+from fireworks_spark.operators import textstats, toolbox
 from fireworks_spark.tables import table
 
 
@@ -51,9 +51,7 @@ def q53_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("k"))
     r = table(spark, sf_dir, "region").select(F.col("r_regionkey").alias("k"))
     out = toolbox.interleave([n, r], ["k"])
-    return dedup.keep_caches(
-        out.select("pos", "src", "k").orderBy("pos"), out
-    )
+    return out.select("pos", "src", "k").orderBy("pos")
 
 
 def q54_label_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +111,7 @@ def q58_hstack(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = c.select("c_custkey", "c_mktsegment")
     b = c.select("c_acctbal", "c_name")
     out = toolbox.hstack(a, b, ["c_custkey"], ["c_acctbal", "c_name"])
-    return dedup.keep_caches(out.orderBy("c_custkey"), out)
+    return out.orderBy("c_custkey")
 
 
 def q59_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,8 +119,7 @@ def q59_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed with range buckets + per-bucket windows (no single-partition
     window)."""
     c = table(spark, sf_dir, "customer").select("c_custkey")
-    out = toolbox.with_row_index(c, ["c_custkey"], "idx")
-    return dedup.keep_caches(out.orderBy("c_custkey"), out)
+    return toolbox.with_row_index(c, ["c_custkey"], "idx").orderBy("c_custkey")
 
 
 def q132_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

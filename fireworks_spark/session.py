@@ -10,7 +10,38 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Every frame this package persists, in persist order, until the next
+# release_caches(). Operators persist intermediates that several branches
+# of one query DAG share; the registry, not the result DataFrame, owns the
+# release, so wrappers (orderBy, select, join) need no handle bookkeeping.
+_PERSISTED: list[DataFrame] = []
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` at DataFrame.persist's default storage level,
+    recorded for :func:`release_caches`. The one place this package
+    caches a frame."""
+    out = df.persist()
+    _PERSISTED.append(out)
+    return out
+
+
+def release_caches(df: DataFrame) -> None:
+    """Unpersist every frame persisted through :func:`persist` since the
+    last release, and forget them.
+
+    ``df`` names the result the caller has just materialized; call this
+    AFTER the action, because the cached frames are part of its lineage.
+    The release is not scoped to ``df``: frames persisted for results not
+    yet materialized are freed too, and those results then recompute their
+    intermediates (``with_row_index`` results may number rows differently
+    on recompute), so materialize every pending result first. Unpersisting
+    a frame an operator already freed itself is a no-op."""
+    while _PERSISTED:
+        _PERSISTED.pop().unpersist()
+
 
 # Host-profile mitigations (measured on this rig — OPTIMIZATION_r16.md
 # "Host pathology"): the test VM's kernel handles first-touch page faults

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fireworks_spark.functions.rounding import pround
+from fireworks_spark.session import persist
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -644,8 +645,8 @@ def dedup_stream_against(
     """
     from fireworks_spark.operators import dedup as dd
 
-    corpus_sets = dd.shingle_sets(corpus, id_col, text_col, n).persist()
-    corpus_bands = (
+    corpus_sets = persist(dd.shingle_sets(corpus, id_col, text_col, n))
+    corpus_bands = persist(
         dd.lsh_bands(
             dd.minhash_signatures_rowwise(
                 corpus, id_col, text_col, num_hashes, n
@@ -655,7 +656,6 @@ def dedup_stream_against(
             rows_per_band,
         )
         .select(F.col(id_col).alias("rid"), "band_idx", "band_key")
-        .persist()
     )
     csets = corpus_sets.select(
         F.col(id_col).alias("rid"), F.col("shingles").alias("_sb")

@@ -1,8 +1,9 @@
-"""Cache-leak audit (VERDICT r11 #6): every operator that persists an
-intermediate frame must hand the release handle back to its caller via the
-_fw_caches convention, so that release_caches(result) leaves ZERO cached
-blocks behind — without the spark.catalog.clearCache() backstop bench.py
-runs between queries (which would mask a leaked handle).
+"""Cache-leak audit (VERDICT r11 #6): every frame the package persists goes
+through the registry helper ``fireworks_spark.session.persist``, so that
+release_caches(result) leaves ZERO cached blocks behind — without the
+spark.catalog.clearCache() backstop bench.py runs between queries (which
+would mask a leak). The source scan below enforces the one-helper rule for
+every module; the query sweep checks the release end to end.
 
 The probe is the session CacheManager: DataFrame.persist registers the
 plan there at call time (materialized or not) and unpersist removes it, so
@@ -13,7 +14,12 @@ anywhere in fireworks_spark).
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
+
+import fireworks_spark
 
 # One query per persist-bearing operator family (dedup shingles, minhash
 # bands, simhash signatures, cross-corpus join, connected components,
@@ -42,8 +48,8 @@ PERSIST_QUERIES = [
     "q113_rebalance_strata",
     "q157_filtered_pretraining_mix",
     "q138_pretraining_mix",
-    # row-index/running-total family (toolbox._row_index_cache handles,
-    # found leaking by the r12 full-registry sweep)
+    # row-index/running-total family (found leaking by the r12
+    # full-registry sweep)
     "q53_interleave",
     "q58_hstack",
     "q59_row_index",
@@ -79,8 +85,38 @@ def test_release_caches_sweeps_clean(spark, sf_dir):
             spark.catalog.clearCache()  # isolate subsequent queries
     assert not leaked, (
         f"queries left cached plans after release_caches: {leaked} — an "
-        "operator persisted a frame without attaching its handle "
-        "(_attach_caches) or a wrapper dropped the _fw_caches attribute"
+        "operator cached a frame without going through "
+        "fireworks_spark.session.persist"
+    )
+
+
+def test_only_the_registry_helper_persists():
+    """Every ``.persist(``/``.cache(`` call in the package sits inside
+    ``session.persist``; any other call site caches a frame that
+    release_caches never hears of."""
+    root = pathlib.Path(fireworks_spark.__file__).parent
+    raw = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = {
+            id(n)
+            for f in tree.body
+            if path == root / "session.py"
+            and isinstance(f, ast.FunctionDef)
+            and f.name == "persist"
+            for n in ast.walk(f)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+                and id(node) not in allowed
+            ):
+                raw.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not raw, (
+        f"{len(raw)} call(s) cache a frame outside session.persist, so "
+        f"release_caches cannot free it: {raw}"
     )
 
 

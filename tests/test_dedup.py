@@ -853,7 +853,7 @@ def test_extended_prefix_k_equivalence(spark):
     for thr in (0.3, 0.5):
         base = None
         for k in (1, 2, 4, 6):
-            cand, stats, caches = dedup._prefix_candidate_stats(
+            cand, _, _ = dedup._prefix_candidate_stats(
                 dedup.shingle_sets(df, "doc_id", "text", 3), "doc_id",
                 thr, k=k,
             )
@@ -870,8 +870,7 @@ def test_extended_prefix_k_equivalence(spark):
             if base is None:
                 base = verified
             assert verified == base, f"thr={thr} k={k}"
-            for c in caches:
-                c.unpersist()
+            dedup.release_caches(cand)
 
 
 def test_prefix_common_counts_all_collisions(spark):
@@ -902,7 +901,7 @@ def test_prefix_common_counts_all_collisions(spark):
             + [401, 402, 403, 404, 405, 406]),
     ]
     sets = spark.createDataFrame(rows, "doc_id long, shingles array<long>")
-    cand, stats, caches = dedup._prefix_candidate_stats(
+    cand, stats, _ = dedup._prefix_candidate_stats(
         sets, "doc_id", 0.7, k=1
     )
     got = {(r.ida, r.idb): r._common for r in cand.collect()}
@@ -913,8 +912,7 @@ def test_prefix_common_counts_all_collisions(spark):
     # the documented bound |A∩B| <= _common + _hotA + _hotB is exact and
     # can be tightened freely: 10 shared <= 4 + 6 + 6
     assert 10 <= got[(0, 1)] + hot[0] + hot[1]
-    for c in caches:
-        c.unpersist()
+    dedup.release_caches(cand)
 
 
 def test_hamming_routing_probe_memoized(spark):

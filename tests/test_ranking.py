@@ -90,6 +90,7 @@ def test_q82_85_vs_oracle(spark, sf_dir, oracle_con):
 
 
 def test_with_running_total_distributed(spark):
+    from fireworks_spark.operators.dedup import release_caches
     from fireworks_spark.operators.toolbox import with_running_total
 
     df = spark.createDataFrame(
@@ -101,7 +102,11 @@ def test_with_running_total_distributed(spark):
     for i in range(200):
         acc += i % 7 + 1
         assert rows[i] == acc
-    out._row_index_cache.unpersist()
+    # the range buckets stay cached until release_caches frees them
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.isEmpty()
+    release_caches(out)
+    assert cache.isEmpty()
 
 
 def test_pack_sequences_budget(spark):

@@ -309,10 +309,13 @@ def test_token_budget_sample_global_uses_distributed_cumsum(spark):
     # budget 250 / 10 tokens each -> exactly 25 docs, cum_tokens = 10..250
     assert len(got) == 25
     assert sorted(r.cum_tokens for r in got) == [10 * i for i in range(1, 26)]
-    # two-pass design exposes its cache handle; release it
-    cache = getattr(out, "_row_index_cache", None)
-    assert cache is not None
-    cache.unpersist()
+    # the two-pass design caches its range buckets until release_caches
+    from fireworks_spark.operators.dedup import release_caches
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.isEmpty()
+    release_caches(out)
+    assert cache.isEmpty()
 
 
 def test_histogram_bins_and_edges(spark):

@@ -122,7 +122,7 @@ def main() -> None:
 
     from fireworks_spark.operators import dedup
     from fireworks_spark.queries_pipeline import q36_ann_ivf_topk
-    from fireworks_spark.session import get_spark
+    from fireworks_spark.session import get_spark, persist
     from fireworks_spark.tables import table
 
     spark = get_spark(
@@ -134,7 +134,7 @@ def main() -> None:
 
     def lazy_shape(spark, sf_dir):
         e = table(spark, sf_dir, "embeddings")
-        cvec = (
+        cvec = persist(
             e.select(
                 "label",
                 F.posexplode(
@@ -151,15 +151,13 @@ def main() -> None:
                 F.col("label").alias("pt"),
                 F.transform("_s", lambda s: s["cx"]).alias("cv"),
             )
-            .persist()
         )
-        out = (
+        return (
             ivf_topk_lazy(e, e.filter(F.col("vec_id") < 10), cvec,
                           k=5, nprobe=2)
             .withColumn("rk", F.col("rk").cast("long"))
             .orderBy("qid", "rk")
         )
-        return dedup.keep_caches(out, extra=[cvec])
 
     # parity check first (both shapes, sorted rows must be identical)
     a = [tuple(r) for r in q36_ann_ivf_topk(spark, sf_dir).collect()]
