@@ -1060,10 +1060,14 @@ def _source_fingerprint(df: DataFrame):
     fingerprints. Bounded at 256 stat calls; the total file count always
     folds in, so adding/removing files past the cap still changes the key.
     None (non-file source, listing failure) degrades to the plan hash
-    alone — no worse than the pre-fingerprint behavior."""
+    alone — no worse than the pre-fingerprint behavior, and logged."""
     try:
         files = df.inputFiles()
     except Exception:
+        _log.warning(
+            "input file listing failed; routing key uses the plan hash alone",
+            exc_info=True,
+        )
         return None
     sig: list = [len(files)]
     for f in sorted(files)[:256]:
@@ -1083,6 +1087,10 @@ def _routing_key(df: DataFrame, *shape):
             _source_fingerprint(df),
         ) + shape
     except Exception:  # plan not hashable (foreign session internals)
+        _log.warning(
+            "plan not hashable; hamming_pairs routing memo disabled",
+            exc_info=True,
+        )
         return None
 
 

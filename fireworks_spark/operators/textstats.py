@@ -9,6 +9,8 @@ generalized to the operations an LLM training-data pipeline needs.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -16,6 +18,8 @@ from fireworks_spark.operators.spread import spread
 from fireworks_spark.functions.rounding import pround
 from fireworks_spark.functions.text import normalize_text, words
 from fireworks_spark.session import persist
+
+_log = logging.getLogger(__name__)
 
 # language -> stopword alternation used by the n-gram/stopword language
 # heuristic; mirrored verbatim in the DuckDB oracle (queries_pipeline.py)
@@ -473,12 +477,17 @@ DOMAIN_OVERLAP_SINGLE_SCAN_BYTES = 512 * 1024 * 1024
 def _estimated_input_bytes(df: DataFrame) -> int:
     """Catalyst's estimate of the plan's input size (file bytes for a
     parquet scan) — the routing signal for scan-count-sensitive regimes.
-    Falls back to 0 (= small) when the estimate is unavailable."""
+    Falls back to 0 (= small) when the estimate is unavailable, and logs
+    that it did."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
+        _log.warning(
+            "input size estimate unavailable; routing as 0 bytes (small)",
+            exc_info=True,
+        )
         return 0
 
 

@@ -1,11 +1,12 @@
-"""bench.py's BENCH_LOCAL.json merge rule (VERDICT r10 #1): the record
-file keeps per-query MINIMA with a staleness cap, so one noisy run can
-never replace the regression baseline wholesale, while a deliberate
-slower-but-correct change still re-baselines after STALE_CAP runs."""
+"""bench.py's record file and driver contract. BENCH_LOCAL.json keeps
+per-query minima per host, keyed by a fingerprint of the machine and the
+run, and a run rewrites only its own host's entry. main() prints the full
+result line, the bounded chunk lines and the digest, in that order."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 _spec = importlib.util.spec_from_file_location(
@@ -17,179 +18,114 @@ _spec.loader.exec_module(bench)
 
 
 def test_faster_run_lowers_record_and_resets_age():
-    rec, ages = bench.merge_records(
-        {"q1": 3.0}, {"q1": 2}, {"q1": 2.5}
-    )
-    assert rec == {"q1": 2.5} and ages == {"q1": 0}
+    rec = bench.merge_records({"q1": 3.0}, {"q1": 2.5})
+    assert rec == {"q1": 2.5}
 
 
 def test_noisy_run_cannot_overwrite_record():
-    # the r10 failure mode: a uniformly inflated window must not become
-    # the baseline — the record holds, only the age ticks
+    # a uniformly inflated window must not become the baseline
     prev = {"q1": 1.0, "q2": 4.1}
-    rec, ages = bench.merge_records(prev, {}, {"q1": 1.3, "q2": 11.8})
+    rec = bench.merge_records(prev, {"q1": 1.3, "q2": 11.8})
     assert rec == prev
-    assert ages == {"q1": 1, "q2": 1}
-
-
-def test_stale_cap_rebaselines_a_deliberate_slowdown():
-    rec, ages = {"q1": 1.0}, {"q1": 0}
-    for i in range(bench.STALE_CAP - 1):
-        rec, ages = bench.merge_records(rec, ages, {"q1": 2.0})
-        assert rec == {"q1": 1.0}, f"record moved early at run {i}"
-    rec, ages = bench.merge_records(rec, ages, {"q1": 2.0})
-    assert rec == {"q1": 2.0} and ages == {"q1": 0}
 
 
 def test_failure_carries_record_and_unknown_queries_drop():
-    rec, ages = bench.merge_records(
-        {"q1": 1.0, "q_gone": 9.9}, {"q1": 3}, {"q1": None, "q_new": 0.5}
+    rec = bench.merge_records(
+        {"q1": 1.0, "q_gone": 9.9}, {"q1": None, "q_new": 0.5}
     )
-    # failed run: record and age survive untouched
-    assert rec["q1"] == 1.0 and ages["q1"] == 3
-    # renamed/removed queries leave the file; new ones enter at age 0
+    # failed run: the record survives untouched
+    assert rec["q1"] == 1.0
+    # renamed/removed queries leave the file; new ones enter
     assert "q_gone" not in rec
-    assert rec["q_new"] == 0.5 and ages["q_new"] == 0
+    assert rec["q_new"] == 0.5
 
 
-def test_equal_reading_resets_age():
-    rec, ages = bench.merge_records({"q1": 1.0}, {"q1": 4}, {"q1": 1.0})
-    assert rec == {"q1": 1.0} and ages == {"q1": 0}
+_FOREIGN_KEY = "nproc=? mem_total_kb=? kernel=? pyspark=? cpus=32 sf=0.1"
+_FOREIGN = {
+    "fingerprint": {
+        "nproc": None,
+        "mem_total_kb": None,
+        "kernel": None,
+        "pyspark": None,
+        "cpus": 32,
+        "sf": 0.1,
+    },
+    "value": 1.5,
+    "queries": {"q1": 0.5, "q2": 1.0},
+}
 
 
-def test_environmental_run_detection():
-    # 6 sub-2s records all reading 2x+ -> environmental signature
-    prev = {f"q{i}": 1.0 for i in range(6)}
-    hot = {f"q{i}": 2.4 for i in range(6)}
-    assert bench.run_is_inflated(prev, hot)
-    # quiet run: same records, readings at ~1x
-    assert not bench.run_is_inflated(prev, {f"q{i}": 1.05 for i in range(6)})
-    # one genuinely regressed query among quiet ones is NOT environmental
-    mixed = {f"q{i}": 1.0 for i in range(6)}
-    mixed["q0"] = 5.0
-    assert not bench.run_is_inflated(prev, mixed)
-    # too few probes: no signature, never flag
-    assert not bench.run_is_inflated({"q0": 1.0}, {"q0": 9.0})
+def test_record_is_keyed_by_host(tmp_path):
+    path = str(tmp_path / "BENCH_LOCAL.json")
+    with open(path, "w") as fh:
+        json.dump({_FOREIGN_KEY: _FOREIGN}, fh, indent=1)
+    before = json.dumps(_FOREIGN, indent=1)
+    fp = bench.fingerprint("/data/sf0.1", "4")
+    key = bench.host_key(fp)
+    assert key != _FOREIGN_KEY and fp["cpus"] == 4 and fp["sf"] == 0.1
+
+    bench.update_record(path, fp, {"q1": 2.0, "q2": None, "q3": 0.7})
+    bench.update_record(path, fp, {"q1": 2.5, "q2": 0.9, "q3": 0.6})
+    with open(path) as fh:
+        doc = json.load(fh)
+    assert list(doc) == [_FOREIGN_KEY, key]
+    # another host's slower records are neither read nor rewritten
+    assert json.dumps(doc[_FOREIGN_KEY], indent=1) == before
+    assert doc[key] == {
+        "fingerprint": fp,
+        "value": 3.5,
+        "queries": {"q1": 2.0, "q2": 0.9, "q3": 0.6},
+    }
 
 
-def test_five_noisy_runs_cannot_rebaseline_records():
-    # r12 failure mode: STALE_CAP consecutive environmental windows used to
-    # age every record to the cap and mass-rebaseline upward. With aging
-    # frozen on inflated runs, the records and ages are byte-identical
-    # after any number of noisy windows.
-    prev = {f"q{i}": 1.0 for i in range(6)}
-    prev["q_big"] = 2.44  # the q147 shape: >2s record, 2.8x noisy reading
-    ages = {k: 0 for k in prev}
-    for _ in range(bench.STALE_CAP + 2):
-        noisy = {f"q{i}": 2.5 for i in range(6)}
-        noisy["q_big"] = 6.86
-        assert bench.run_is_inflated(prev, noisy)
-        prev, ages = bench.merge_records(prev, ages, noisy, freeze_aging=True)
-    assert prev["q_big"] == 2.44
-    assert all(v == 1.0 for k, v in prev.items() if k != "q_big")
-    assert all(v == 0 for v in ages.values())
+def test_main_contract(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """main() end to end on three tiny queries, one of which raises: the
+    three stdout line kinds in order, and the record gains this host's
+    entry beside an untouched foreign one."""
+    from fireworks_spark import registry
+    from fireworks_spark.tables import table
 
+    def _boom(spark, sf_dir):
+        raise RuntimeError("boom")
 
-def test_environmental_run_still_merges_minima_down():
-    prev = {f"q{i}": 1.0 for i in range(6)}
-    run = {f"q{i}": 2.5 for i in range(6)}
-    run["q_fast"] = 0.4
-    prev["q_fast"] = 0.9
-    rec, ages = bench.merge_records(prev, {}, run, freeze_aging=True)
-    assert rec["q_fast"] == 0.4 and ages["q_fast"] == 0
+    queries = {
+        "t_range": lambda spark, sf_dir: spark.range(10),
+        "t_nation": lambda spark, sf_dir: table(spark, sf_dir, "nation"),
+        "t_boom": _boom,
+    }
+    monkeypatch.setattr(registry, "QUERIES", queries)
+    path = str(tmp_path / "BENCH_LOCAL.json")
+    with open(path, "w") as fh:
+        json.dump({_FOREIGN_KEY: _FOREIGN}, fh)
+    monkeypatch.setattr(bench, "RECORD_PATH", path)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
 
+    # main()'s builder confs apply to the shared session: restore them
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        bench.main()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
 
-def test_deliberate_slowdown_still_rebaselines_on_quiet_runs():
-    # freeze only bites on flagged runs; the quiet-run path is unchanged
-    rec, ages = {"q1": 1.0}, {"q1": 0}
-    for _ in range(bench.STALE_CAP):
-        rec, ages = bench.merge_records(rec, ages, {"q1": 2.0})
-    assert rec == {"q1": 2.0} and ages == {"q1": 0}
+    lines = capsys.readouterr().out.strip().splitlines()
+    full = json.loads(lines[0])
+    assert full["metric"] == "total_query_time"
+    assert set(full["queries"]) == set(queries)
+    assert full["queries"]["t_boom"] is None
+    merged: dict = {}
+    for line in lines[1:-1]:
+        doc = json.loads(line)
+        assert doc["metric"] == "total_query_time_part"
+        merged.update(doc["queries"])
+    assert merged == full["queries"]
+    digest = json.loads(lines[-1])
+    assert digest["n_failed"] == 1 and digest["failed"] == ["t_boom"]
 
-
-def test_resolve_freeze_control_corroboration():
-    """ADVICE r13: the cohort signature alone can be faked by a code
-    regression that uniformly slows fixed per-query work. The external
-    controls (repo-independent) arbitrate: controls inflated -> freeze;
-    BOTH controls at record speed -> aging proceeds (code regression);
-    missing floor -> trust the cohort signature (bootstrap)."""
-    # quiet run: never freeze, streak resets
-    assert bench.resolve_freeze(False, 2.0, 5) == (False, 0)
-    # cohort + controls inflated: environmental, freeze, streak grows
-    assert bench.resolve_freeze(True, 1.8, 0, py_control_ratio=1.9) == (True, 1)
-    assert bench.resolve_freeze(True, 1.8, 3, py_control_ratio=1.9) == (True, 4)
-    # cohort inflated but BOTH controls at record speed: code regression
-    # — the exact back door ADVICE r13 named — aging proceeds
-    assert bench.resolve_freeze(True, 1.0, 3, py_control_ratio=1.05) == (
-        False,
-        0,
-    )
-    # no control floor yet (first runs): cohort signature is trusted
-    assert bench.resolve_freeze(True, None, 0) == (True, 1)
-
-
-def test_resolve_freeze_requires_both_controls():
-    """ADVICE r14: this host's degraded windows hit Python workers up to
-    16x while sparing the JVM ~2x. A window that leaves the JVM control
-    on its floor while inflating the Arrow-heavy cohort must STILL
-    freeze — the JVM control alone cannot rule out asymmetric
-    degradation; only both controls at record speed prove code."""
-    # JVM control at record speed but py control inflated: freeze holds
-    assert bench.resolve_freeze(True, 1.0, 0, py_control_ratio=3.0) == (True, 1)
-    # JVM control at record speed, py floor not bootstrapped: fail safe
-    assert bench.resolve_freeze(True, 1.0, 0, py_control_ratio=None) == (
-        True,
-        1,
-    )
-    # inverse asymmetry (py quiet, JVM inflated): also freeze
-    assert bench.resolve_freeze(True, 2.0, 0, py_control_ratio=1.0) == (True, 1)
-
-
-def test_merge_control_floor_bootstrap():
-    """The floor establishes only as the MIN of TWO readings from
-    separate non-inflated runs; once it exists, min-merge always
-    applies (including on inflated runs — a faster reading only
-    improves the floor)."""
-    # first quiet reading: candidate only, no floor yet
-    assert bench.merge_control_floor(None, None, 1.2, False) == (None, 1.2)
-    # second quiet reading: floor = min of the two, candidate cleared
-    assert bench.merge_control_floor(None, 1.2, 1.4, False) == (1.2, None)
-    # inflated run never bootstraps (candidate survives untouched)
-    assert bench.merge_control_floor(None, 1.2, 9.0, True) == (None, 1.2)
-    assert bench.merge_control_floor(None, None, 9.0, True) == (None, None)
-    # established floor min-merges on any run, inflated or not
-    assert bench.merge_control_floor(1.2, None, 1.1, True) == (1.1, None)
-    assert bench.merge_control_floor(1.2, None, 5.0, False) == (1.2, None)
-    # failed control read: everything carries through
-    assert bench.merge_control_floor(1.2, None, None, False) == (1.2, None)
-
-
-def test_resolve_freeze_streak_cap():
-    """VERDICT r15 #1: exceeding FROZEN_RUNS_CAP declares the degradation
-    'the new normal' and lets records re-baseline — but only when a
-    bootstrapped control corroborates it by reading at record speed.
-    An unbootstrapped (None) or inflated control keeps the freeze in
-    place however long the streak grows: rebaselining on no evidence
-    would ratchet all 194 records upward during host degradation."""
-    streak = 0
-    for i in range(bench.FROZEN_RUNS_CAP):
-        freeze, streak = bench.resolve_freeze(True, 2.0, streak)
-        assert freeze, f"froze-out early at run {i}"
-    # cap exceeded, control still inflated: keep freezing
-    freeze, streak = bench.resolve_freeze(True, 2.0, streak)
-    assert freeze and streak == bench.FROZEN_RUNS_CAP + 1
-    # cap exceeded, control floors never bootstrapped (the live state at
-    # round 16 start: streak 8, both floors null): keep freezing
-    freeze, _ = bench.resolve_freeze(True, None, streak, py_control_ratio=None)
-    assert freeze
-    # cap exceeded AND one control at record speed: the persistent window
-    # is corroborated as the new normal — aging resumes
-    freeze, _ = bench.resolve_freeze(True, 1.0, streak, py_control_ratio=3.0)
-    assert not freeze
-    freeze, _ = bench.resolve_freeze(True, None, streak, py_control_ratio=1.05)
-    assert not freeze
-    # a quiet run afterwards resets the streak entirely
-    assert bench.resolve_freeze(False, None, streak) == (False, 0)
+    with open(path) as fh:
+        rec = json.load(fh)
+    key = bench.host_key(bench.fingerprint(*bench.bench_params()))
+    assert rec[_FOREIGN_KEY] == _FOREIGN
+    assert set(rec[key]["queries"]) == {"t_range", "t_nation"}
 
 
 def test_chunk_queries_bounded_and_complete():

@@ -16,18 +16,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     tag, suffix, *names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from bench import warm_session
     from fireworks_spark.operators.dedup import release_caches
     from fireworks_spark.registry import QUERIES
-    from fireworks_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="fw-capture-plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, sf_dir, cpus = warm_session("fw-capture-plans")
     outdir = os.path.join("plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
@@ -55,10 +48,7 @@ def main() -> None:
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(hdr + plan)
         print("wrote", name, flush=True)
-        try:
-            release_caches(df)
-        except Exception:
-            pass
+        release_caches(df)
         spark.catalog.clearCache()
 
 

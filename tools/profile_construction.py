@@ -26,24 +26,11 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--min="):
             min_s = float(a.split("=")[1])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("FIREWORKS_SCRATCH_WAREHOUSE", "1")
-
+    from bench import warm_session
     from fireworks_spark.operators.dedup import release_caches
     from fireworks_spark.registry import QUERIES
-    from fireworks_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="fw-profile-construction",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    from fireworks_spark.tables import table
-
-    t = table(spark, sf_dir, "nation")
-    t.repartition(8).mapInPandas(lambda it: it, t.schema).count()
+    spark, sf_dir, _ = warm_session("fw-profile-construction")
 
     rows = []
     for name, fn in QUERIES.items():

@@ -15,6 +15,11 @@ query typically shows ratio well under 10. We flag ratio > 12 as a bend
 candidate (super-linear even if sf0.1 had ZERO overhead), and print the
 top-N by sf1 wall-time regardless so the profile is visible.
 
+The sf0.1 side is this host's entry in the bench record file, found by
+bench.py's fingerprint of ``$SPARK_GRAFT_SF_DIR``/``$SPARK_GRAFT_CPUS``
+(the defaults of a plain ``python bench.py``). With no entry for this host
+the script exits non-zero and lists the recorded host keys.
+
 Usage:
     python tools/sweep_analyze.py [--sweep SWEEP_SF1.json]
         [--bench BENCH_LOCAL.json] [--top 25]
@@ -24,6 +29,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench as bench_py  # noqa: E402
 
 BEND_RATIO = 12.0
 
@@ -53,13 +65,20 @@ FAMILIES = {
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sweep", default="/root/repo/SWEEP_SF1.json")
-    ap.add_argument("--bench", default="/root/repo/BENCH_LOCAL.json")
+    ap.add_argument("--sweep", default=os.path.join(REPO, "SWEEP_SF1.json"))
+    ap.add_argument("--bench", default=bench_py.RECORD_PATH)
     ap.add_argument("--top", type=int, default=25)
     args = ap.parse_args()
 
     sweep = json.load(open(args.sweep))["queries"]
-    bench = json.load(open(args.bench))["queries"]
+    records = json.load(open(args.bench))
+    key = bench_py.host_key(bench_py.fingerprint(*bench_py.bench_params()))
+    if key not in records:
+        sys.exit(
+            f"no record for this host ({key}) in {args.bench}; recorded: "
+            + "; ".join(records)
+        )
+    bench = records[key]["queries"]
 
     rows = []
     for name, rec in sweep.items():

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Time a subset of registry queries under bench conditions (one warm
-session, local[$SPARK_GRAFT_CPUS], shuffle=cpus, noop-write materialize).
+"""Time a subset of registry queries under bench conditions (the warm
+session of bench.warm_session, noop-write materialize, caches released
+after each rep).
 
     python tools/time_query.py q174_stream_restart [q167_... ...] [--reps N]
 
@@ -20,26 +21,11 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--reps="):
             reps = int(a.split("=")[1])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # match bench conditions: scratch warehouse opt-in (session.get_spark)
-    os.environ.setdefault("FIREWORKS_SCRATCH_WAREHOUSE", "1")
-
+    from bench import warm_session
     from fireworks_spark.operators.dedup import release_caches
     from fireworks_spark.registry import QUERIES
-    from fireworks_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="fw-time-query",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    from fireworks_spark.tables import table
-
-    # minimal warmup: JVM + python worker pool
-    t = table(spark, sf_dir, "nation")
-    t.repartition(8).mapInPandas(lambda it: it, t.schema).count()
+    spark, sf_dir, _ = warm_session("fw-time-query")
 
     for name in names:
         fn = QUERIES[name]
